@@ -135,7 +135,7 @@ def q_soql_relationship3(spark, sf_dir):
     salesforce_to_s3_operator.py:29 forwards such paths verbatim to the
     API). Each hop lowers to one broadcast lookup join via the
     relationship registry — the chain shares every common prefix
-    (chain_table memoization in plans/soql.py), so the four distinct
+    (per-path hop memoization in plans/soql.py), so the four distinct
     paths here cost four joins total, not ten."""
     from salesforce_plugin_spark.plans import soql_to_df
     from salesforce_plugin_spark.sources.catalog import fixture_relationships

@@ -162,7 +162,7 @@ def date_dimension(
       (1=Monday), wk_iso int, qtr int, is_weekend int, fiscal_yr int,
       fiscal_qtr int, fiscal_mon int`` — fiscal parts under the same
       Salesforce convention as the SOQL FISCAL_* functions
-      (plans/soql.py _fiscal_col: fiscal month 1 = ``fiscal_start_month``,
+      (plans/soql.py _fiscal_sql: fiscal month 1 = ``fiscal_start_month``,
       FY named by the calendar year it ends in).
 
     Built as ONE ``sequence()`` explode on the driver-side literal range

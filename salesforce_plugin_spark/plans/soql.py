@@ -1,8 +1,10 @@
 """SOQL front door (SURVEY §2 D, §7 phase 4): a small parser that turns the
 reference's string-query entry points (``soql`` param
 salesforce_to_s3_operator.py:29, ``query`` :127, generated projection
-:201-202) into DataFrame plans. Strictly a front-end — every construct
-lowers to DataFrame calls and Catalyst owns optimization from there.
+:201-202) into DataFrame plans. Strictly a front-end — each statement is
+printed as one Spark SQL text over temp views that bind the resolved
+objects (unique names per call, dropped once the text is analyzed), and
+Catalyst owns optimization from there.
 
 Supported surface (the D-rows of SURVEY §2):
 
@@ -59,12 +61,18 @@ analytics replica):
 
 from __future__ import annotations
 
+import datetime as _dt
+import json
+import logging
 import re
+import uuid
 from dataclasses import dataclass
 from typing import Callable
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DateType, DecimalType, IntegerType
+
+_log = logging.getLogger(__name__)
 
 
 class SoqlError(ValueError):
@@ -119,24 +127,24 @@ def tokenize(s: str) -> list[Tok]:
 # ---------------------------------------------------------------------------
 
 _AGGS = {"COUNT", "COUNT_DISTINCT", "SUM", "AVG", "MIN", "MAX"}
-_DATE_FNS: dict[str, Callable[[Column], Column]] = {
-    "CALENDAR_YEAR": F.year,
-    "CALENDAR_MONTH": F.month,
-    "CALENDAR_QUARTER": F.quarter,
-    "DAY_ONLY": F.to_date,
-    "HOUR_IN_DAY": F.hour,
+_DATE_FNS: dict[str, str] = {  # SOQL fn -> Spark SQL over {0}
+    "CALENDAR_YEAR": "year({0})",
+    "CALENDAR_MONTH": "month({0})",
+    "CALENDAR_QUARTER": "quarter({0})",
+    "DAY_ONLY": "to_date({0})",
+    "HOUR_IN_DAY": "hour({0})",
     # D19 extensions. DAY_IN_WEEK: 1=Sunday in both SOQL and Spark's
     # dayofweek — a direct match. WEEK_IN_YEAR / WEEK_IN_MONTH use SOQL's
     # simple 7-day blocks from Jan 1 / the 1st (NOT ISO weeks — Spark's
     # weekofyear is ISO and diverges at year boundaries).
-    "DAY_IN_WEEK": F.dayofweek,
-    "DAY_IN_MONTH": F.dayofmonth,
-    "DAY_IN_YEAR": F.dayofyear,
-    "WEEK_IN_YEAR": lambda c: ((F.dayofyear(c) - 1) / 7 + 1).cast("int"),
-    "WEEK_IN_MONTH": lambda c: ((F.dayofmonth(c) - 1) / 7 + 1).cast("int"),
+    "DAY_IN_WEEK": "dayofweek({0})",
+    "DAY_IN_MONTH": "dayofmonth({0})",
+    "DAY_IN_YEAR": "dayofyear({0})",
+    "WEEK_IN_YEAR": "CAST((dayofyear({0}) - 1) / 7 + 1 AS INT)",
+    "WEEK_IN_MONTH": "CAST((dayofmonth({0}) - 1) / 7 + 1 AS INT)",
 }
 #: Fiscal D19 functions — need the org's fiscal-year start month, so they are
-#: built per-query (see ``_fiscal_col``); keys listed here for parse-time
+#: built per-query (see ``_fiscal_sql``); keys listed here for parse-time
 #: recognition alongside _DATE_FNS.
 _FISCAL_FNS = {"FISCAL_YEAR", "FISCAL_QUARTER", "FISCAL_MONTH"}
 #: D18 keyword range literals (value-less; the N-parameterized family is
@@ -332,18 +340,7 @@ class _Parser:
                 raise SoqlError(
                     f"SOQL: expected nested SELECT at {t.pos}"
                 )
-            depth, j = 0, self.i
-            while j < len(self.toks):
-                if self.toks[j].text == "(":
-                    depth += 1
-                elif self.toks[j].text == ")":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                j += 1
-            sub = _Parser(self.toks[self.i:j], self.src).parse_query()
-            self.i = j
-            self.expect(")")
+            sub = self.parse_subquery()
             return {"kind": "child_sub", "q": sub,
                     "alias": self.maybe_alias(sub["from"].lower())}
         if t.kind == "word" and t.text.upper() == "COUNT" and \
@@ -375,6 +372,22 @@ class _Parser:
             return {"kind": "fields", "scope": scope_t.text.upper()}
         e = self.parse_value_expr()
         return {**e, "alias": self.maybe_alias(default_alias(e))}
+
+    def parse_subquery(self) -> dict:
+        """A nested SELECT up to and including its closing ')'."""
+        depth, j = 0, self.i
+        while j < len(self.toks):
+            if self.toks[j].text == "(":
+                depth += 1
+            elif self.toks[j].text == ")":
+                if depth == 0:
+                    break
+                depth -= 1
+            j += 1
+        sub = _Parser(self.toks[self.i:j], self.src).parse_query()
+        self.i = j
+        self.expect(")")
+        return sub
 
     def _typeof_field_list(self) -> list[str]:
         """Comma-separated plain field names inside a TYPEOF branch
@@ -476,21 +489,7 @@ class _Parser:
         self.expect("(")
         if self.peek() and self.peek().kind == "word" and \
                 self.peek().text.upper() == "SELECT":
-            sub = _Parser(self.toks[self.i:], self.src)
-            # re-parse the subquery from the remaining tokens up to its ')'
-            depth, j = 0, self.i
-            while j < len(self.toks):
-                if self.toks[j].text == "(":
-                    depth += 1
-                elif self.toks[j].text == ")":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                j += 1
-            sub = _Parser(self.toks[self.i:j], self.src).parse_query()
-            self.i = j
-            self.expect(")")
-            return {"kind": "subquery", "q": sub}
+            return {"kind": "subquery", "q": self.parse_subquery()}
         vals = [self.parse_literal()]
         while self.peek() and self.peek().text == ",":
             self.next()
@@ -544,10 +543,38 @@ def default_alias(e: dict) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Lowering to DataFrame plans
+# Lowering to one Spark SQL text
 # ---------------------------------------------------------------------------
 
-def _fiscal_col(fn: str, c: Column, start_month: int) -> Column:
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_lit(v) -> str:
+    """Spark SQL literal with the value and type ``F.lit(v)`` gives: INT or
+    BIGINT by range, DOUBLE (``D`` suffix, never DECIMAL), a backslash-
+    escaped STRING (Spark's default ``escapedStringLiterals=false``),
+    DATE/TIMESTAMP for ``datetime`` values."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        if not -(2**63) <= v < 2**63:
+            raise SoqlError(f"SOQL: integer literal {v} out of range")
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    if isinstance(v, float):
+        return f"{v!r}D"
+    if isinstance(v, _dt.datetime):
+        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
+    if isinstance(v, _dt.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise SoqlError(f"SOQL: unsupported literal {v!r}")
+
+
+def _fiscal_sql(fn: str, x: str, start_month: int) -> str:
     """FISCAL_* (D19) under the org's fiscal-year start month.
 
     Convention (Salesforce default): fiscal month 1 is ``start_month``; the
@@ -555,46 +582,22 @@ def _fiscal_col(fn: str, c: Column, start_month: int) -> Column:
     start_month=2, Jan-2020 is FY2020, Feb-2020 opens FY2021).
     ``start_month=1`` collapses to the calendar functions.
     """
-    fm = (F.month(c) - start_month + 12) % 12 + 1
+    sm = _sql_lit(start_month)
+    fm = f"((month({x}) - {sm} + 12) % 12 + 1)"
     if fn == "FISCAL_MONTH":
         return fm
     if fn == "FISCAL_QUARTER":
-        return ((fm - 1) / 3 + 1).cast("int")
+        return f"CAST(({fm} - 1) / 3 + 1 AS INT)"
     if start_month == 1:
-        return F.year(c)
-    return F.year(c) + F.when(F.month(c) >= start_month, 1).otherwise(0)
-
-
-def _value_col(e: dict, fsm: int = 1) -> Column:
-    if e["kind"] == "field":
-        return F.col(e["name"].lower())
-    if e["kind"] == "datefn":
-        if e["fn"] in _FISCAL_FNS:
-            return _fiscal_col(e["fn"], _value_col(e["arg"], fsm), fsm)
-        return _DATE_FNS[e["fn"]](_value_col(e["arg"], fsm))
-    if e["kind"] == "agg":
-        raise SoqlError("aggregate not allowed here")
-    raise SoqlError(f"bad value expr {e}")
-
-
-def _agg_col(e: dict, fsm: int = 1) -> Column:
-    fn, arg = e["fn"], e.get("arg")
-    if fn == "COUNT":
-        return F.count(_value_col(arg, fsm)) if arg else F.count(F.lit(1))
-    if fn == "COUNT_DISTINCT":
-        return F.countDistinct(_value_col(arg, fsm))
-    return {"SUM": F.sum, "AVG": F.avg, "MIN": F.min, "MAX": F.max}[fn](
-        _value_col(arg, fsm)
-    )
+        return f"year({x})"
+    return f"(year({x}) + CASE WHEN month({x}) >= {sm} THEN 1 ELSE 0 END)"
 
 
 def _agg_sig(e: dict) -> tuple:
     """Structural signature of an aggregate expression — used to match
     HAVING / ORDER BY aggregate references to SELECTed aggregates in
     the two-phase grouping-set lowering."""
-    import json as _json
-
-    return (e["fn"], _json.dumps(e.get("arg"), sort_keys=True))
+    return (e["fn"], json.dumps(e.get("arg"), sort_keys=True))
 
 
 def _agg_refs(e) -> list:
@@ -613,66 +616,79 @@ def _agg_refs(e) -> list:
     return []
 
 
-def _literal_col(e: dict) -> Column:
-    if e["kind"] == "lit":
-        return F.lit(e["v"])
-    raise SoqlError(f"bad literal {e}")
+#: D18 date literal -> n -> (anchor, start, end): the half-open range
+#: [anchor + start, anchor + end), in days from the day/week anchors and in
+#: months from the month/quarter/year anchors. Weeks start Monday (Spark's
+#: ``date_trunc('week')``); SOQL's locale-dependent week start is out of
+#: scope. The LAST_* day families include today (public SOQL semantics:
+#: "continues up to the current second").
+_DATE_RANGES: dict[str, Callable[[int], tuple[str, int, int]]] = {
+    "TODAY": lambda n: ("day", 0, 1),
+    "YESTERDAY": lambda n: ("day", -1, 0),
+    "TOMORROW": lambda n: ("day", 1, 2),
+    "THIS_WEEK": lambda n: ("week", 0, 7),
+    "LAST_WEEK": lambda n: ("week", -7, 0),
+    "NEXT_WEEK": lambda n: ("week", 7, 14),
+    "THIS_MONTH": lambda n: ("month", 0, 1),
+    "LAST_MONTH": lambda n: ("month", -1, 0),
+    "NEXT_MONTH": lambda n: ("month", 1, 2),
+    "THIS_QUARTER": lambda n: ("quarter", 0, 3),
+    "LAST_QUARTER": lambda n: ("quarter", -3, 0),
+    "NEXT_QUARTER": lambda n: ("quarter", 3, 6),
+    "THIS_YEAR": lambda n: ("year", 0, 12),
+    "LAST_YEAR": lambda n: ("year", -12, 0),
+    "NEXT_YEAR": lambda n: ("year", 12, 24),
+    "LAST_90_DAYS": lambda n: ("day", -90, 1),
+    "NEXT_90_DAYS": lambda n: ("day", 1, 91),
+    "LAST_N_DAYS": lambda n: ("day", -n, 1),
+    "NEXT_N_DAYS": lambda n: ("day", 1, n + 1),
+    "N_DAYS_AGO": lambda n: ("day", -n, 1 - n),
+    "LAST_N_WEEKS": lambda n: ("week", -7 * n, 0),
+    "NEXT_N_WEEKS": lambda n: ("week", 7, 7 * (n + 1)),
+    "LAST_N_MONTHS": lambda n: ("month", -n, 0),
+    "NEXT_N_MONTHS": lambda n: ("month", 1, n + 1),
+    "LAST_N_QUARTERS": lambda n: ("quarter", -3 * n, 0),
+    "NEXT_N_QUARTERS": lambda n: ("quarter", 3, 3 * (n + 1)),
+    "LAST_N_YEARS": lambda n: ("year", -12 * n, 0),
+    "NEXT_N_YEARS": lambda n: ("year", 12, 12 * (n + 1)),
+}
 
 
-def _datelit_range(e: dict, today: Column) -> tuple[Column, Column]:
+def _datelit_sql(e: dict, today: str) -> tuple[str, str]:
     """D18: a SOQL date literal denotes a half-open **[start, end) date
-    range** relative to ``today`` — ``=`` means "within", ``<`` "before the
-    start", ``>`` "after the end" (lowered in ``_Lowerer._bool``). Weeks
-    start Monday (Spark's ``date_trunc('week')``); SOQL's locale-dependent
-    week start is out of scope.
-    """
-    fn, n = e["fn"], e.get("n", 0)
-    week0 = F.date_trunc("week", today).cast("date")
-    month0 = F.trunc(today, "month")
-    quarter0 = F.trunc(today, "quarter")
-    year0 = F.trunc(today, "year")
-    ranges: dict[str, tuple[Column, Column]] = {
-        "TODAY": (today, F.date_add(today, 1)),
-        "YESTERDAY": (F.date_sub(today, 1), today),
-        "TOMORROW": (F.date_add(today, 1), F.date_add(today, 2)),
-        "THIS_WEEK": (week0, F.date_add(week0, 7)),
-        "LAST_WEEK": (F.date_sub(week0, 7), week0),
-        "NEXT_WEEK": (F.date_add(week0, 7), F.date_add(week0, 14)),
-        "THIS_MONTH": (month0, F.add_months(month0, 1)),
-        "LAST_MONTH": (F.add_months(month0, -1), month0),
-        "NEXT_MONTH": (F.add_months(month0, 1), F.add_months(month0, 2)),
-        "THIS_QUARTER": (quarter0, F.add_months(quarter0, 3)),
-        "LAST_QUARTER": (F.add_months(quarter0, -3), quarter0),
-        "NEXT_QUARTER": (F.add_months(quarter0, 3), F.add_months(quarter0, 6)),
-        "THIS_YEAR": (year0, F.add_months(year0, 12)),
-        "LAST_YEAR": (F.add_months(year0, -12), year0),
-        "NEXT_YEAR": (F.add_months(year0, 12), F.add_months(year0, 24)),
-        # the LAST_* day families include today (public SOQL semantics:
-        # "continues up to the current second")
-        "LAST_90_DAYS": (F.date_sub(today, 90), F.date_add(today, 1)),
-        "NEXT_90_DAYS": (F.date_add(today, 1), F.date_add(today, 91)),
-        "LAST_N_DAYS": (F.date_sub(today, n), F.date_add(today, 1)),
-        "NEXT_N_DAYS": (F.date_add(today, 1), F.date_add(today, n + 1)),
-        "N_DAYS_AGO": (F.date_sub(today, n), F.date_sub(today, n - 1)),
-        "LAST_N_WEEKS": (F.date_sub(week0, 7 * n), week0),
-        "NEXT_N_WEEKS": (F.date_add(week0, 7), F.date_add(week0, 7 * (n + 1))),
-        "LAST_N_MONTHS": (F.add_months(month0, -n), month0),
-        "NEXT_N_MONTHS": (F.add_months(month0, 1), F.add_months(month0, n + 1)),
-        "LAST_N_QUARTERS": (F.add_months(quarter0, -3 * n), quarter0),
-        "NEXT_N_QUARTERS": (F.add_months(quarter0, 3), F.add_months(quarter0, 3 * (n + 1))),
-        "LAST_N_YEARS": (F.add_months(year0, -12 * n), year0),
-        "NEXT_N_YEARS": (F.add_months(year0, 12), F.add_months(year0, 12 * (n + 1))),
-    }
-    if fn not in ranges:
-        raise SoqlError(f"SOQL: unknown date literal {fn}")
-    return ranges[fn]
+    range** relative to ``today`` (a SQL date expression) — ``=`` means
+    "within", ``<`` "before the start", ``>`` "after the end" (lowered in
+    ``_Lowerer._bool``)."""
+    if e["fn"] not in _DATE_RANGES:
+        raise SoqlError(f"SOQL: unknown date literal {e['fn']}")
+    anchor, start, end = _DATE_RANGES[e["fn"]](e.get("n", 0))
+    if anchor in ("day", "week"):
+        a = today if anchor == "day" else f"CAST(date_trunc('week', {today}) AS DATE)"
+        shift = lambda k: a if k == 0 else (  # noqa: E731
+            f"date_add({a}, {k})" if k > 0 else f"date_sub({a}, {-k})"
+        )
+    else:
+        a = f"trunc({today}, '{anchor}')"
+        shift = lambda k: a if k == 0 else f"add_months({a}, {k})"  # noqa: E731
+    return shift(start), shift(end)
+
+
+#: SQL of a comparison against a date-literal range [s, e)
+_RANGE_CMP = {
+    "=": "(({l} >= {s}) AND ({l} < {e}))",
+    "!=": "(({l} < {s}) OR ({l} >= {e}))",
+    "<": "({l} < {s})",
+    "<=": "({l} < {e})",
+    ">": "({l} >= {e})",
+    ">=": "({l} >= {s})",
+}
 
 
 def _datelit_range_py(e: dict, today) -> tuple:
-    """Python mirror of :func:`_datelit_range` for a *static* ``today`` —
-    used to derive scan-side pushdown bounds at plan-build time (the Column
-    form stays the source of truth for the actual filter)."""
-    import datetime as _dt
+    """Python mirror of :func:`_datelit_sql` for a *static* ``today`` —
+    used to derive scan-side pushdown bounds at plan-build time (the SQL
+    form stays the source of truth for the actual filter). Kept as its own
+    encoding of the ranges so tests can check one against the other."""
 
     def add_months(d: _dt.date, n: int) -> _dt.date:
         m = d.month - 1 + n
@@ -764,6 +780,7 @@ _TYPE_CATEGORY = {
     "date": "date", "timestamp": "date", "timestamp_ntz": "date",
 }
 
+_INTEGRAL = ("byte", "short", "integer", "long")
 _ISO_DATE_RE = re.compile(r"\d{4}-\d{2}-\d{2}([T ][\d:.+Zz-]+)?")
 
 
@@ -783,36 +800,156 @@ def _literal_category(e: dict) -> str | None:
     return None
 
 
-class _Lowerer:
-    def __init__(
-        self,
-        resolve: Callable[[str], DataFrame],
-        registry: RelationshipRegistry | None = None,
-        today=None,
-        fiscal_start_month: int = 1,
-        ci_strings: bool = False,
-    ):
+class _Binder:
+    """Binds the objects one ``soql_to_df`` call references: each
+    ``(object, ts_range)`` is resolved once through the caller's resolver
+    and, once the printed SQL names it, registered as a temp view under a
+    name unique to the call, so concurrent calls never see each other's
+    views. :meth:`sql` runs the text and drops the views again."""
+
+    def __init__(self, spark: SparkSession, resolve: Callable[..., DataFrame]):
         import inspect
 
-        self.resolve = resolve
-        self.registry = registry or RelationshipRegistry()
-        self.ci_strings = ci_strings
-        self._schema_cats: dict[str, str] = {}
-        # D18 anchor: a datetime.date pins relative date literals for
-        # deterministic replay; None = the engine clock (current_date).
-        self.today = F.lit(today) if today is not None else F.current_date()
-        self.today_raw = today
-        self.fsm = fiscal_start_month
+        self.spark, self.resolve = spark, resolve
+        self.tag = uuid.uuid4().hex
+        self.frames: dict[tuple, DataFrame] = {}
+        self.views: dict[tuple, str] = {}
+        self.types: dict[str, dict] = {}
         # Resolvers that accept ts_range= get scan-side event-time pushdown
-        # (see _static_ts_range); detected by signature, never by trial call.
+        # (see _Lowerer._static_ts_range); detected by signature, never by
+        # trial call.
         try:
             params = inspect.signature(resolve).parameters.values()
-            self._accepts_ts_range = any(
-                p.name == "ts_range" or p.kind == inspect.Parameter.VAR_KEYWORD
-                for p in params
-            )
         except (TypeError, ValueError):
-            self._accepts_ts_range = False
+            params = []
+        self.accepts_ts_range = any(
+            p.name == "ts_range" or p.kind == p.VAR_KEYWORD for p in params
+        )
+
+    def frame(self, name: str, ts_range=None) -> DataFrame:
+        key = (name.lower(), ts_range)
+        if key not in self.frames:
+            kw = {} if ts_range is None else {"ts_range": ts_range}
+            self.frames[key] = self.resolve(name, **kw)
+        return self.frames[key]
+
+    def dtype(self, name: str, col: str):
+        """Spark type of ``col`` (lower case) on ``name``, or None; the
+        schema is fetched on first use only."""
+        types = self.types.get(name.lower())
+        if types is None:
+            types = self.types[name.lower()] = {
+                f.name.lower(): f.dataType for f in self.frame(name).schema.fields
+            }
+        return types.get(col)
+
+    def view(self, name: str, ts_range=None) -> str:
+        self.frame(name, ts_range)
+        key = (name.lower(), ts_range)
+        view = self.views.setdefault(key, f"__soql_{self.tag}_{len(self.views)}")
+        return _ident(view)
+
+    def sql(self, text: str) -> DataFrame:
+        """Run ``text`` over the bound views. The returned DataFrame is
+        already analyzed, so the views can go before it executes. They are
+        dropped from the session catalog directly: ``Catalog.dropTempView``
+        would also uncache the resolved plans, i.e. the caller's cached
+        tables and DataFrames."""
+        catalog, bound = self.spark._jsparkSession.sessionState().catalog(), []
+        try:
+            for key, view in self.views.items():
+                self.frames[key].createOrReplaceTempView(view)
+                bound.append(view)
+            return self.spark.sql(text)
+        finally:
+            for view in bound:
+                catalog.dropTempView(view)
+
+
+def _prefix(path: tuple) -> str:
+    return "__" + "__".join(path) + "__"
+
+
+def _select(cols: str, src: tuple) -> str:
+    hint, from_, where = src
+    return f"SELECT {hint}{cols} FROM {from_}{where}"
+
+
+def _derived(sql: str, alias: str) -> tuple:
+    return ("", f"({sql}) AS {_ident(alias)}", "")
+
+
+class _Lowerer:
+    """Prints one parsed SOQL statement as a Spark SQL SELECT over the
+    binder's views. Type checks read the bound schemas."""
+
+    def __init__(self, binder: _Binder, registry: RelationshipRegistry | None,
+                 today, fiscal_start_month: int, ci_strings: bool):
+        self.b = binder
+        self.registry = registry or RelationshipRegistry()
+        self.ci_strings = ci_strings
+        # D18 anchor: a datetime.date pins relative date literals for
+        # deterministic replay; None = the engine clock (current_date).
+        self.today_raw = today
+        self.today = _sql_lit(today) if today is not None else "current_date()"
+        self.fsm = fiscal_start_month
+        self.from_ = ""
+        #: joined column -> (object, column) it reads, or its category
+        self.scope: dict[str, tuple | str] = {}
+        self._agg_alias_map: dict | None = None
+
+    def _nested(self, ci_strings: bool) -> "_Lowerer":
+        return _Lowerer(self.b, self.registry, self.today_raw, self.fsm, ci_strings)
+
+    # -- values ------------------------------------------------------------
+
+    def _value(self, e: dict, qual: str = "") -> str:
+        if e["kind"] == "field":
+            return qual + _ident(e["name"].lower())
+        if e["kind"] == "datefn":
+            x = self._value(e["arg"], qual)
+            if e["fn"] in _FISCAL_FNS:
+                return _fiscal_sql(e["fn"], x, self.fsm)
+            return _DATE_FNS[e["fn"]].format(x)
+        if e["kind"] == "agg":
+            raise SoqlError("aggregate not allowed here")
+        raise SoqlError(f"bad value expr {e}")
+
+    def _agg(self, e: dict) -> str:
+        fn, arg = e["fn"], e.get("arg")
+        if fn == "COUNT":
+            return f"count({self._value(arg)})" if arg else "count(1)"
+        if fn == "COUNT_DISTINCT":
+            return f"count(DISTINCT {self._value(arg)})"
+        return f"{fn.lower()}({self._value(arg)})"
+
+    def _resolve_agg(self, e: dict) -> str:
+        """Aggregate expression in HAVING/ORDER BY: under the two-phase
+        lowering it must resolve to the FINAL output column (re-deriving
+        the aggregate would aggregate base rows); otherwise the plain
+        lowering applies."""
+        if self._agg_alias_map is not None:
+            return _ident(self._agg_alias_map[_agg_sig(e)])
+        return self._agg(e)
+
+    def _dtype(self, name: str):
+        """Spark type of a column in scope (lower-case name), or None."""
+        src = self.scope.get(name)
+        if src is None:
+            return self.b.dtype(self.from_, name)
+        return self.b.dtype(*src) if isinstance(src, tuple) else None
+
+    def _category(self, name: str) -> str | None:
+        src = self.scope.get(name)
+        if isinstance(src, str):
+            return src
+        dt = self._dtype(name)
+        return None if dt is None else _TYPE_CATEGORY.get(dt.typeName(), "other")
+
+    def _arg_type(self, e: dict):
+        if e["kind"] == "field":
+            return self._dtype(e["name"].lower())
+        return DateType() if e["fn"] == "DAY_ONLY" else IntegerType()
 
     # -- D8: dot-path lookup joins -----------------------------------------
 
@@ -832,62 +969,65 @@ class _Lowerer:
             for v in node:
                 _Lowerer._walk_fields(v, fn)
 
-    def _apply_lookups(self, df: DataFrame, q: dict) -> DataFrame:
+    def _apply_lookups(self, q: dict, joins: list, hints: list) -> None:
         """Resolve every dotted field path with broadcast lookup joins
-        (≤5 levels like SOQL) and rewrite the AST to the joined columns."""
+        (≤5 levels like SOQL) and rewrite the AST to the joined columns,
+        named ``__rel1__rel2__col``. Each hop projects only the columns the
+        query reads from it."""
         dotted: set[str] = set()
         scope = [q["select"], q["where"], q["group"], q["having"],
                  [o["expr"] for o in q["order"]]]
         self._walk_fields(scope, lambda n: "." in n["name"] and dotted.add(n["name"]))
         if not dotted:
-            return df
-        base_table = q["from"].lower()
-        chain_table: dict[tuple, str] = {}
+            return
+        hops: dict[tuple, tuple] = {}  # path -> (table, fk column, pk)
+        reads: dict[tuple, set] = {}  # path -> columns read from that hop
         mapping: dict[str, str] = {}
         for name in sorted(dotted):
             segs = name.lower().split(".")
             if len(segs) > 6:
                 raise SoqlError(f"SOQL: relationship path too deep: {name!r}")
             path: tuple = ()
-            cur_table = base_table
+            cur_table = q["from"].lower()
             for seg in segs[:-1]:
                 parent_path = path
                 path = path + (seg,)
-                if path not in chain_table:
+                if path not in hops:
                     rel = self.registry.lookups.get((cur_table, seg))
                     if rel is None:
                         raise SoqlError(
                             f"SOQL: unknown relationship {seg!r} on {cur_table!r}"
                         )
                     parent_table, fk, pk = rel
-                    prefix = "__" + "__".join(path) + "__"
-                    pdf = self.resolve(parent_table)
-                    pdf = pdf.select(
-                        *[F.col(c).alias(prefix + c.lower()) for c in pdf.columns]
-                    )
-                    fk_col = (
-                        "__" + "__".join(parent_path) + "__" + fk.lower()
-                        if parent_path
-                        else fk.lower()
-                    )
-                    df = df.join(
-                        F.broadcast(pdf),
-                        F.col(fk_col) == F.col(prefix + pk.lower()),
-                        "left",
-                    )
-                    chain_table[path] = parent_table.lower()
-                cur_table = chain_table[path]
-            mapping[name.lower()] = "__" + "__".join(segs[:-1]) + "__" + segs[-1]
+                    fk_col = fk.lower()
+                    if parent_path:
+                        reads[parent_path].add(fk_col)
+                        fk_col = _prefix(parent_path) + fk_col
+                    hops[path] = (parent_table.lower(), fk_col, pk.lower())
+                    reads[path] = {pk.lower()}
+                cur_table = hops[path][0]
+            reads[path].add(segs[-1])
+            mapping[name.lower()] = _prefix(path) + segs[-1]
+        for path, (table, fk_col, pk) in hops.items():
+            prefix, alias = _prefix(path), f"__j{len(joins)}"
+            cols = ", ".join(
+                f"{_ident(c)} AS {_ident(prefix + c)}" for c in sorted(reads[path])
+            )
+            joins.append(
+                f"LEFT JOIN (SELECT {cols} FROM {self.b.view(table)}) AS {alias} "
+                f"ON {_ident(fk_col)} = {_ident(prefix + pk)}"
+            )
+            hints.append(alias)
+            self.scope.update({prefix + c: (table, c) for c in reads[path]})
 
         def rewrite(n):
             n["name"] = mapping.get(n["name"].lower(), n["name"])
 
         self._walk_fields(scope, rewrite)
-        return df
 
     # -- TYPEOF: polymorphic branch joins ----------------------------------
 
-    def _apply_typeof(self, df: DataFrame, q: dict) -> DataFrame:
+    def _apply_typeof(self, q: dict, joins: list, hints: list) -> None:
         """Lower each ``TYPEOF rel WHEN Type THEN fields … END`` select item
         to one broadcast left join per branch, guarded by the discriminator
         (``type_col = disc AND fk = pk``) so a row only ever matches the
@@ -912,31 +1052,25 @@ class _Lowerer:
             out: list[tuple] = []
             named: list[str] = []
 
-            def join_branch(ty: str) -> str:
+            def join_branch(ty: str, fields: list[str]) -> str:
                 parent_table, pk, disc = types[ty]
-                prefix = f"__typeof__{rel}__{ty}__"
-                pdf = self.resolve(parent_table)
-                pdf = pdf.select(
-                    *[F.col(c).alias(prefix + c.lower()) for c in pdf.columns]
-                )
-                nonlocal df
-                df = df.join(
-                    F.broadcast(pdf),
-                    (F.col(type_col) == F.lit(disc))
-                    & (F.col(fk.lower()) == F.col(prefix + pk.lower())),
-                    "left",
-                )
-                return prefix
-
-            def check_fields(ty: str, fields: list[str]) -> None:
-                parent_table = types[ty][0]
-                cols = {c.lower() for c in self.resolve(parent_table).columns}
                 for f_ in fields:
-                    if f_.lower() not in cols:
+                    if self.b.dtype(parent_table, f_.lower()) is None:
                         raise SoqlError(
                             f"SOQL: TYPEOF field {f_!r} does not exist on "
                             f"{parent_table!r}"
                         )
+                prefix, alias = f"__typeof__{rel}__{ty}__", f"__j{len(joins)}"
+                reads = sorted({pk.lower(), *(f_.lower() for f_ in fields)})
+                cols = ", ".join(f"{_ident(c)} AS {_ident(prefix + c)}" for c in reads)
+                joins.append(
+                    f"LEFT JOIN (SELECT {cols} FROM {self.b.view(parent_table)}) "
+                    f"AS {alias} ON ({_ident(type_col)} = {_sql_lit(disc)}) AND "
+                    f"({_ident(fk.lower())} = {_ident(prefix + pk.lower())})"
+                )
+                hints.append(alias)
+                self.scope.update({prefix + c: (parent_table, c) for c in reads})
+                return prefix
 
             for ty_name, fields in it["branches"]:
                 ty = ty_name.lower()
@@ -945,13 +1079,10 @@ class _Lowerer:
                         f"SOQL: unknown TYPEOF type {ty_name!r} for "
                         f"{it['rel']!r} (registered: {sorted(types)})"
                     )
-                check_fields(ty, fields)
-                prefix = join_branch(ty)
+                prefix = join_branch(ty, fields)
                 named.append(ty)
                 for f_ in fields:
-                    out.append(
-                        (F.col(prefix + f_.lower()), f"{ty}_{f_.lower()}")
-                    )
+                    out.append((_ident(prefix + f_.lower()), f"{ty}_{f_.lower()}"))
             if it["else"]:
                 rest = [ty for ty in types if ty not in named]
                 if not rest:
@@ -959,21 +1090,15 @@ class _Lowerer:
                         "SOQL: TYPEOF ELSE has no remaining registered types "
                         f"for {it['rel']!r} — every type is named in a WHEN"
                     )
-                for ty in rest:
-                    check_fields(ty, it["else"])
-                    join_branch(ty)
+                prefixes = [join_branch(ty, it["else"]) for ty in rest]
                 for f_ in it["else"]:
-                    refs = [
-                        F.col(f"__typeof__{rel}__{ty}__{f_.lower()}")
-                        for ty in rest
-                    ]
-                    out.append((F.coalesce(*refs), f"else_{f_.lower()}"))
+                    refs = ", ".join(_ident(p + f_.lower()) for p in prefixes)
+                    out.append((f"coalesce({refs})", f"else_{f_.lower()}"))
             it["cols"] = out
-        return df
 
     # -- D9: parent-to-child nested subselects -----------------------------
 
-    def _apply_child_subs(self, df: DataFrame, q: dict) -> DataFrame:
+    def _apply_child_subs(self, q: dict, joins: list) -> None:
         base_table = q["from"].lower()
         for it in q["select"]:
             if it["kind"] != "child_sub":
@@ -992,31 +1117,31 @@ class _Lowerer:
                 raise SoqlError(
                     "SOQL: aggregates are not allowed in child subselects"
                 )
-            inner = _Lowerer(self.resolve, self.registry)
-            inner.today, inner.fsm = self.today, self.fsm
-            inner.today_raw = self.today_raw
-            cdf = self.resolve(child_table)
-            inner._schema_cats = {
-                f.name.lower(): _TYPE_CATEGORY.get(f.dataType.typeName(), "other")
-                for f in cdf.schema.fields
-            }
+            inner = self._nested(ci_strings=False)
+            inner.from_ = child_table
+            where = ""
             if sub["where"] is not None:
-                cdf = cdf.filter(inner._bool(sub["where"]))
-            sel = [
-                _value_col(s, self.fsm).alias(s["alias"]) for s in sub["select"]
-            ]
-            nested = cdf.groupBy(F.col(fk.lower()).alias("__child_fk")).agg(
-                F.collect_list(F.struct(*sel)).alias(it["alias"])
+                where = f" WHERE {inner._bool(sub['where'])}"
+            sel = ", ".join(
+                f"{inner._value(s)} AS {_ident(s['alias'])}" for s in sub["select"]
             )
-            df = df.join(
-                nested, F.col(pk.lower()) == F.col("__child_fk"), "left"
-            ).drop("__child_fk")
-        return df
+            alias = f"__j{len(joins)}"
+            fk_key = f"__child_fk{len(joins)}"
+            joins.append(
+                f"LEFT JOIN (SELECT {_ident(fk.lower())} AS {_ident(fk_key)}, "
+                f"collect_list(struct({sel})) AS {_ident(it['alias'])} "
+                f"FROM {self.b.view(child_table)}{where} "
+                f"GROUP BY {_ident(fk.lower())}) AS {alias} "
+                f"ON {_ident(pk.lower())} = {alias}.{_ident(fk_key)}"
+            )
+            self.scope[it["alias"].lower()] = "other"
+
+    # -- type discipline ---------------------------------------------------
 
     def _field_category(self, e: dict) -> str | None:
-        """Comparison category of a value expr, from the resolved schema."""
+        """Comparison category of a value expr, from the bound schema."""
         if e["kind"] == "field":
-            return self._schema_cats.get(e["name"].lower())
+            return self._category(e["name"].lower())
         if e["kind"] == "datefn":
             return "date" if e["fn"] == "DAY_ONLY" else "num"
         return None  # aggregates etc.: skip the check
@@ -1043,12 +1168,6 @@ class _Lowerer:
                 f"SOQL: cannot compare {lcat} field {name!r} {op} {rcat} literal"
             )
 
-    def _reset_cats(self, df: DataFrame) -> None:
-        self._schema_cats = {
-            f.name.lower(): _TYPE_CATEGORY.get(f.dataType.typeName(), "other")
-            for f in df.schema.fields
-        }
-
     # -- scan-side event-time pushdown -------------------------------------
 
     def _static_ts_range(self, q: dict):
@@ -1060,8 +1179,6 @@ class _Lowerer:
         scan (catalog.load_table(ts_range=…) filters raw nanos longs ahead
         of the timestamp repair, re-enabling row-group min/max skipping
         that the repair projection otherwise blocks — SCALE.md)."""
-        import datetime as _dt
-
         if q["where"] is None:
             return None
 
@@ -1077,28 +1194,26 @@ class _Lowerer:
 
         def bounds(r: dict, op: str):
             """(lo, hi) datetimes — a superset of values passing `col op r`."""
-            day = _dt.timedelta(days=1)
             if r["kind"] == "datelit":
                 if self.today_raw is None:
                     return None
                 s, e = _datelit_range_py(r, self.today_raw)
                 if s is None:
                     return None
-                s = _dt.datetime.combine(s, _dt.time())
-                e = _dt.datetime.combine(e, _dt.time())
-                return {
-                    "=": (s, e), ">=": (s, None), ">": (e, None),
-                    "<": (None, s), "<=": (None, e),
-                }.get(op)
-            if r["kind"] == "lit" and isinstance(r["v"], str):
-                p = parse_iso(r["v"])
-                if p is None:
+                # '>' follows a range literal's end
+                s, e = (_dt.datetime.combine(d, _dt.time()) for d in (s, e))
+                after = e
+            elif r["kind"] == "lit" and isinstance(r["v"], str):
+                s = parse_iso(r["v"])
+                if s is None:
                     return None
-                return {
-                    "=": (p, p + day), ">=": (p, None), ">": (p, None),
-                    "<": (None, p), "<=": (None, p + day),
-                }.get(op)
-            return None
+                e, after = s + _dt.timedelta(days=1), s
+            else:
+                return None
+            return {
+                "=": (s, e), ">=": (s, None), ">": (after, None),
+                "<": (None, s), "<=": (None, e),
+            }.get(op)
 
         cands: dict[str, list] = {}
         for c in self._split_and(q["where"]):
@@ -1108,7 +1223,7 @@ class _Lowerer:
             if l.get("kind") != "field" or "." in l["name"]:
                 continue
             name = l["name"].lower()
-            if self._schema_cats.get(name) != "date":
+            if self._category(name) != "date":
                 continue
             b = bounds(c["r"], c["op"])
             if b is None:
@@ -1131,7 +1246,7 @@ class _Lowerer:
         fmt = lambda d: d.strftime("%Y-%m-%d %H:%M:%S") if d else None  # noqa: E731
         return (col, fmt(lo), fmt(hi))
 
-    def _two_phase_grouping(self, pre, key_names, q, aggs):
+    def _two_phase_grouping(self, src, key_names, q, aggs):
         """ROLLUP/CUBE over decomposable aggregates, lowered two-phase
         (round 9): Spark expands the INPUT ×(grouping sets) before a
         naive multi-set aggregate — on a fact table that is 3-4× the
@@ -1159,11 +1274,16 @@ class _Lowerer:
         BASE rows — so two-phase only applies when every such
         reference structurally matches a SELECTed aggregate, and the
         match map (sig → output alias) is installed for ``_bool`` /
-        the order lowering to resolve through. Returns None when not
-        applicable (caller uses the single-phase form)."""
-        from pyspark.sql import types as _T
-
+        the order lowering to resolve through. Returns the base as a
+        derived-table source plus the final expression of each SELECTed
+        aggregate, or None when not applicable (caller uses the
+        single-phase form). Argument types come from the bound schemas."""
         items = aggs or [{"fn": "COUNT", "arg": None, "alias": "count"}]
+        sig_map = {_agg_sig(it): it["alias"] for it in items}
+        order_aggs = [o["expr"] for o in q["order"] if o["expr"]["kind"] == "agg"]
+        if any(_agg_sig(r) not in sig_map for r in _agg_refs(q["having"]) + order_aggs):
+            return None
+        keys = ", ".join(_ident(k) for k in key_names)
 
         # COUNT_DISTINCT-only form (round 10): when EVERY aggregate is
         # COUNT_DISTINCT over the SAME column, the base is the distinct
@@ -1176,82 +1296,40 @@ class _Lowerer:
         # aggregates keep the single-phase form (a multiplicity-losing
         # pair base cannot also serve COUNT/SUM partials).
         if all(it["fn"] == "COUNT_DISTINCT" for it in items):
-            args = {_agg_sig(it)[1:] for it in items}
-            if len(args) != 1:
+            if len({_agg_sig(it)[1:] for it in items}) != 1:
                 return None  # different columns need different bases
-            sig_map = {}
-            vcol = _value_col(items[0].get("arg"), self.fsm)
-            base = pre.select(
-                *key_names, vcol.alias("__dv")
-            ).distinct()
-            finals = []
-            for it in items:
-                finals.append(F.countDistinct(F.col("__dv")).alias(it["alias"]))
-                sig_map[_agg_sig(it)] = it["alias"]
-            order_aggs = [
-                o["expr"]
-                for o in (q.get("order") or [])
-                if o["expr"]["kind"] == "agg"
-            ]
-            for ref in _agg_refs(q.get("having")) + order_aggs:
-                if _agg_sig(ref) not in sig_map:
-                    return None
-            regrouped = (
-                base.rollup(*key_names)
-                if q["grouping"] == "rollup"
-                else base.cube(*key_names)
-            )
+            dv = self._value(items[0]["arg"])
+            base = _select(f"DISTINCT {keys}, {dv} AS `__dv`", src)
             self._agg_alias_map = sig_map
-            return regrouped.agg(*finals)
+            return _derived(base, "__base"), ["count(DISTINCT `__dv`)"] * len(items)
 
-        partials, finals, sig_map = [], [], {}
+        partials, finals = [], []
         for i, it in enumerate(items):
-            fn, arg, alias = it["fn"], it.get("arg"), it["alias"]
-            p = f"__p{i}"
+            fn, arg = it["fn"], it.get("arg")
+            p, pc = f"`__p{i}`", f"`__pc{i}`"
             if fn == "COUNT":
-                partials.append(
-                    (
-                        F.count(_value_col(arg, self.fsm))
-                        if arg
-                        else F.count(F.lit(1))
-                    ).alias(p)
-                )
-                finals.append(
-                    F.coalesce(F.sum(F.col(p)), F.lit(0))
-                    .cast("long")
-                    .alias(alias)
-                )
+                partials.append(f"{self._agg(it)} AS {p}")
+                finals.append(f"CAST(coalesce(sum({p}), 0) AS BIGINT)")
             elif fn in ("MIN", "MAX"):
-                agg_f = F.min if fn == "MIN" else F.max
-                partials.append(agg_f(_value_col(arg, self.fsm)).alias(p))
-                finals.append(agg_f(F.col(p)).alias(alias))
+                partials.append(f"{self._agg(it)} AS {p}")
+                finals.append(f"{fn.lower()}({p})")
             elif fn == "SUM":
-                col = _value_col(arg, self.fsm)
-                dt = pre.select(col).schema[0].dataType
-                if not isinstance(
-                    dt,
-                    (
-                        _T.ByteType,
-                        _T.ShortType,
-                        _T.IntegerType,
-                        _T.LongType,
-                        _T.DecimalType,
-                    ),
-                ):
+                dt = self._arg_type(arg)
+                if dt is None or dt.typeName() not in _INTEGRAL + ("decimal",):
                     return None
-                partials.append(F.sum(col).alias(p))
-                if isinstance(dt, _T.DecimalType):
+                partials.append(f"{self._agg(it)} AS {p}")
+                if isinstance(dt, DecimalType):
                     # cast back to the SINGLE-phase result type (sum
                     # widens precision once, +10): without it the
                     # partial→final double widening leaks a
                     # decimal(p+20,s) schema that depends on which
                     # lowering path fired (ADVICE r9)
-                    rt = _T.DecimalType(
-                        min(38, dt.precision + 10), dt.scale
+                    finals.append(
+                        f"CAST(sum({p}) AS DECIMAL({min(38, dt.precision + 10)}, "
+                        f"{dt.scale}))"
                     )
-                    finals.append(F.sum(F.col(p)).cast(rt).alias(alias))
                 else:
-                    finals.append(F.sum(F.col(p)).alias(alias))
+                    finals.append(f"sum({p})")
             elif fn == "AVG":
                 # decomposable as (Σ partial sums) / (Σ partial counts)
                 # for INTEGRAL inputs only: partial long sums are exact,
@@ -1266,160 +1344,132 @@ class _Lowerer:
                 # Catalyst-specific (p+4, s+4) divide-and-round
                 # semantics and DOUBLE sums are order-dependent — both
                 # fall back to single-phase (round 10, VERDICT item 5a).
-                col = _value_col(arg, self.fsm)
-                dt = pre.select(col).schema[0].dataType
-                if not isinstance(
-                    dt,
-                    (
-                        _T.ByteType,
-                        _T.ShortType,
-                        _T.IntegerType,
-                        _T.LongType,
-                    ),
-                ):
+                dt = self._arg_type(arg)
+                if dt is None or dt.typeName() not in _INTEGRAL:
                     return None
-                pc = f"__pc{i}"
-                partials.append(F.sum(col).alias(p))
-                partials.append(F.count(col).alias(pc))
-                finals.append(
-                    (F.sum(F.col(p)) / F.sum(F.col(pc))).alias(alias)
-                )
+                v = self._value(arg)
+                partials += [f"sum({v}) AS {p}", f"count({v}) AS {pc}"]
+                finals.append(f"(sum({p}) / sum({pc}))")
             else:  # COUNT_DISTINCT
                 return None
-            sig_map[_agg_sig(it)] = alias
-        order_aggs = [
-            o["expr"]
-            for o in (q.get("order") or [])
-            if o["expr"]["kind"] == "agg"
-        ]
-        for ref in _agg_refs(q.get("having")) + order_aggs:
-            if _agg_sig(ref) not in sig_map:
-                return None
-        base = pre.groupBy(*key_names).agg(*partials)
-        regrouped = (
-            base.rollup(*key_names)
-            if q["grouping"] == "rollup"
-            else base.cube(*key_names)
-        )
+        base = _select(f"{keys}, {', '.join(partials)}", src) + f" GROUP BY {keys}"
         self._agg_alias_map = sig_map
-        return regrouped.agg(*finals)
+        return _derived(base, "__base"), finals
 
-    def _resolve_agg(self, e: dict) -> Column:
-        """Aggregate expression in HAVING/ORDER BY: under the two-phase
-        lowering it must resolve to the FINAL output column (re-deriving
-        the aggregate would aggregate base rows); otherwise the plain
-        lowering applies."""
-        m = getattr(self, "_agg_alias_map", None)
-        if m is not None:
-            return F.col(m[_agg_sig(e)])
-        return _agg_col(e, self.fsm)
+    def lower(self, q: dict) -> tuple[str, list[str]]:
+        """Print ``q`` as one SELECT; returns the text and its output
+        column names."""
+        self.from_ = q["from"]
+        q = self._expand_fields(q)
+        rng = self._static_ts_range(q) if self.b.accepts_ts_range else None
+        joins: list[str] = []
+        hints: list[str] = []
+        self._apply_lookups(q, joins, hints)
+        self._apply_typeof(q, joins, hints)
+        self._apply_child_subs(q, joins)
+        from_ = " ".join([self.b.view(q["from"], rng), *joins])
+        hint = f"/*+ BROADCAST({', '.join(hints)}) */ " if hints else ""
 
-    def lower(self, q: dict) -> DataFrame:
-        self._agg_alias_map = None  # two-phase map is per-lowering state
-        df = self.resolve(q["from"])
-        q = self._expand_fields(q, df.columns)
-        if self._accepts_ts_range:
-            self._reset_cats(df)
-            rng = self._static_ts_range(q)
-            if rng is not None:
-                df = self.resolve(q["from"], ts_range=rng)
-        df = self._apply_lookups(df, q)
-        df = self._apply_typeof(df, q)
-        df = self._apply_child_subs(df, q)
-        self._reset_cats(df)
-        if q["where"] is not None:
-            df = self._apply_where(df, q["where"])
-            # subquery lowering overwrote the category map; restore for HAVING
-            self._reset_cats(df)
+        # top-level AND splits into plain predicates and [NOT] IN
+        # subqueries, which lower to LEFT SEMI / LEFT ANTI joins
+        conjuncts = self._split_and(q["where"]) if q["where"] is not None else []
+        plain = [c for c in conjuncts if not self._is_subquery(c)]
+        where = ""
+        if plain:
+            pred = plain[0]
+            for p in plain[1:]:
+                pred = {"kind": "and", "l": pred, "r": p}
+            where = f" WHERE {self._bool(pred)}"
+        src = (hint, from_, where)
+        subs = [c for c in conjuncts if self._is_subquery(c)]
+        if subs:
+            from_ = _derived(_select("*", src), "__l")[1]
+            for i, s in enumerate(subs):
+                sub_sql, sub_cols = self._nested(self.ci_strings).lower(s["r"]["q"])
+                how = "ANTI" if s["neg"] else "SEMI"
+                from_ += (
+                    f" LEFT {how} JOIN ({sub_sql}) AS `__s{i}` ON "
+                    f"{self._value(s['l'], '`__l`.')} = `__s{i}`.{_ident(sub_cols[0])}"
+                )
+            src = ("", from_, "")
 
         items = q["select"]
         aggs = [it for it in items if it["kind"] == "agg"]
-        if any(it["kind"] == "typeof" for it in items) and (
-            q["group"] is not None or aggs
-        ):
-            raise SoqlError(
-                "SOQL: TYPEOF cannot mix with GROUP BY or aggregates"
-            )
+        kinds = {it["kind"] for it in items}
+        if "typeof" in kinds and (q["group"] is not None or aggs):
+            raise SoqlError("SOQL: TYPEOF cannot mix with GROUP BY or aggregates")
+        if "child_sub" in kinds and (q["group"] is not None or aggs):
+            what = "GROUP BY" if q["group"] is not None else "aggregates"
+            raise SoqlError(f"SOQL: child subselects cannot mix with {what}")
+        if q["having"] is not None and q["group"] is None:
+            raise SoqlError("SOQL: HAVING requires GROUP BY")
+        out_cols = [it["alias"] for it in items if it["kind"] != "typeof"]
         if q["group"] is not None:
-            if any(it["kind"] == "child_sub" for it in items):
-                raise SoqlError(
-                    "SOQL: child subselects cannot mix with GROUP BY"
-                )
-            keys = [_value_col(g, self.fsm).alias(default_alias(g)) for g in q["group"]]
             key_names = [default_alias(g) for g in q["group"]]
-            pre = df.select("*", *[
-                _value_col(g, self.fsm).alias(default_alias(g))
-                for g in q["group"] if g["kind"] == "datefn"
-            ])
-            self._agg_alias_map = None
-            df = None
+            key_sql = [self._value(g) for g in q["group"]]
+            pre = [
+                f"{k} AS {_ident(n)}"
+                for g, k, n in zip(q["group"], key_sql, key_names)
+                if g["kind"] == "datefn"
+            ]
+            if pre:
+                src = _derived(_select(", ".join(["*", *pre]), src), "__pre")
+            agg_sql = [self._agg(it) for it in aggs]
+            grouped = None
             if q["grouping"] in ("rollup", "cube"):
-                df = self._two_phase_grouping(pre, key_names, q, aggs)
-            if df is None:
-                grouped = {
-                    "plain": pre.groupBy(*key_names),
-                    "rollup": pre.rollup(*key_names),
-                    "cube": pre.cube(*key_names),
-                }[q["grouping"]]
-                agg_cols = [
-                    _agg_col(it, self.fsm).alias(it["alias"]) for it in aggs
-                ]
-                if not agg_cols:
-                    agg_cols = [F.count(F.lit(1)).alias("count")]
-                df = grouped.agg(*agg_cols)
-            proj = []
-            for it in items:
-                if it["kind"] == "agg":
-                    proj.append(F.col(it["alias"]))
-                else:
-                    proj.append(F.col(default_alias(it)).alias(it["alias"]))
-            post_agg = df
+                grouped = self._two_phase_grouping(src, key_names, q, aggs)
+            if grouped is not None:
+                src, agg_sql = grouped
+            finals = iter(agg_sql)
+            cols = [
+                f"{next(finals) if it['kind'] == 'agg' else _ident(default_alias(it))}"
+                f" AS {_ident(it['alias'])}"
+                for it in items
+            ]
+            group_by = ", ".join(_ident(k) for k in key_names)
+            if q["grouping"] != "plain":
+                group_by = f"{q['grouping'].upper()}({group_by})"
+            sql = _select(", ".join(cols), src) + f" GROUP BY {group_by}"
             if q["having"] is not None:
-                post_agg = post_agg.filter(self._bool(q["having"], agg_ok=True))
-            df = post_agg.select(*proj)
-            # ORDER BY below may still reference aggregates; the map (set
-            # only under two-phase) stays active through it and dies with
-            # this lowering call
+                sql += f" HAVING {self._bool(q['having'], agg_ok=True)}"
         elif aggs:
-            if any(it["kind"] == "child_sub" for it in items):
-                raise SoqlError(
-                    "SOQL: child subselects cannot mix with aggregates"
-                )
-            df = df.agg(*[_agg_col(it, self.fsm).alias(it["alias"]) for it in items])
+            cols = [
+                f"{self._agg(it) if it['kind'] == 'agg' else self._value(it)}"
+                f" AS {_ident(it['alias'])}"
+                for it in items
+            ]
+            sql = _select(", ".join(cols), src)
         else:
-            proj = []
+            cols, out_cols = [], []
             for it in items:
-                if it["kind"] == "child_sub":
-                    proj.append(F.col(it["alias"]))
-                elif it["kind"] == "typeof":
-                    proj.extend(c.alias(a) for c, a in it["cols"])
-                else:
-                    proj.append(_value_col(it, self.fsm).alias(it["alias"]))
-            df = df.select(*proj)
+                if it["kind"] == "typeof":
+                    cols += [f"{c} AS {_ident(a)}" for c, a in it["cols"]]
+                    out_cols += [a for _, a in it["cols"]]
+                    continue
+                c = _ident(it["alias"]) if it["kind"] == "child_sub" else self._value(it)
+                cols.append(f"{c} AS {_ident(it['alias'])}")
+                out_cols.append(it["alias"])
+            sql = _select(", ".join(cols), src)
 
         if q["order"]:
-            cols = []
+            keys = []
             for o in q["order"]:
-                c = _value_col(o["expr"], self.fsm) if o["expr"]["kind"] != "agg" \
-                    else self._resolve_agg(o["expr"])
-                name = default_alias(o["expr"])
-                if name in df.columns:
-                    c = F.col(name)
-                if o["desc"]:
-                    c = c.desc_nulls_last() if o["nulls"] == "last" else \
-                        c.desc_nulls_first() if o["nulls"] == "first" else c.desc()
-                else:
-                    c = c.asc_nulls_last() if o["nulls"] == "last" else \
-                        c.asc_nulls_first()  # SOQL default: ASC NULLS FIRST
-                cols.append(c)
-            df = df.orderBy(*cols)
-        if q["offset"]:
-            df = df.offset(q["offset"])
+                e = o["expr"]
+                c = self._resolve_agg(e) if e["kind"] == "agg" else self._value(e)
+                if default_alias(e) in out_cols:
+                    c = _ident(default_alias(e))
+                # SOQL default: ASC NULLS FIRST (DESC keeps NULLS LAST)
+                nulls = o["nulls"] or (None if o["desc"] else "first")
+                nulls = f" NULLS {nulls.upper()}" if nulls else ""
+                keys.append(f"{c} {'DESC' if o['desc'] else 'ASC'}{nulls}")
+            sql += " ORDER BY " + ", ".join(keys)
         if q["limit"] is not None:
-            df = df.limit(q["limit"])
-        return df
+            sql += f" LIMIT {q['limit']}"
+        if q["offset"]:
+            sql += f" OFFSET {q['offset']}"
+        return sql, out_cols
 
-    def _expand_fields(self, q: dict, base_cols: list[str]) -> dict:
+    def _expand_fields(self, q: dict) -> dict:
         """Expand FIELDS(ALL|STANDARD|CUSTOM) select items against the
         source object's schema (Salesforce resolves them against the
         field registry; here the catalog schema is that registry —
@@ -1435,6 +1485,7 @@ class _Lowerer:
             it.get("kind") == "agg" for it in q["select"]
         ):
             raise SoqlError("SOQL: FIELDS() cannot mix with aggregates")
+        base_cols = [f.name for f in self.b.frame(q["from"]).schema.fields]
         items: list[dict] = []
         seen: set[str] = set()
         for it in q["select"]:
@@ -1470,25 +1521,6 @@ class _Lowerer:
                     )
         return {**q, "select": items}
 
-    def _apply_where(self, df: DataFrame, e: dict) -> DataFrame:
-        """Split top-level AND into plain predicates and subquery joins so
-        semi/anti conditions lower to left_semi/left_anti joins."""
-        conjuncts = self._split_and(e)
-        plain = [c for c in conjuncts if not self._is_subquery(c)]
-        subs = [c for c in conjuncts if self._is_subquery(c)]
-        if plain:
-            pred = plain[0]
-            for p in plain[1:]:
-                pred = {"kind": "and", "l": pred, "r": p}
-            df = df.filter(self._bool(pred))
-        for s in subs:
-            key = _value_col(s["l"], self.fsm)
-            sub_df = self.lower(s["r"]["q"])
-            sub_key = sub_df.columns[0]
-            how = "left_anti" if s["neg"] else "left_semi"
-            df = df.join(sub_df, key == sub_df[sub_key], how)
-        return df
-
     @staticmethod
     def _split_and(e: dict) -> list[dict]:
         if e["kind"] == "and":
@@ -1499,14 +1531,15 @@ class _Lowerer:
     def _is_subquery(e: dict) -> bool:
         return e["kind"] == "in" and e["r"]["kind"] == "subquery"
 
-    def _bool(self, e: dict, agg_ok: bool = False) -> Column:
+    def _bool(self, e: dict, agg_ok: bool = False) -> str:
         k = e["kind"]
-        if k == "and":
-            return self._bool(e["l"], agg_ok) & self._bool(e["r"], agg_ok)
-        if k == "or":
-            return self._bool(e["l"], agg_ok) | self._bool(e["r"], agg_ok)
+        if k in ("and", "or"):
+            return (
+                f"({self._bool(e['l'], agg_ok)} {k.upper()} "
+                f"{self._bool(e['r'], agg_ok)})"
+            )
         if k == "not":
-            return ~self._bool(e["e"], agg_ok)
+            return f"(NOT {self._bool(e['e'], agg_ok)})"
         if k == "like":
             # D3: SOQL LIKE is case-insensitive; only string fields
             lcat = self._field_category(e["l"])
@@ -1514,7 +1547,7 @@ class _Lowerer:
                 raise SoqlError(
                     f"SOQL: LIKE requires a string field, got {lcat}"
                 )
-            return F.lower(_value_col(e["l"], self.fsm)).like(e["pat"].lower())
+            return f"(lower({self._value(e['l'])}) LIKE {_sql_lit(e['pat'].lower())})"
         if k == "in":
             if e["r"]["kind"] == "subquery":
                 raise SoqlError(
@@ -1528,53 +1561,42 @@ class _Lowerer:
                         "in IN lists; use range comparisons instead"
                     )
                 self._check_comparable(e["l"], v, "IN")
-            vals = [v["v"] for v in e["r"]["vals"]]
-            lhs_in = _value_col(e["l"], self.fsm)
+            vals = [v.get("v") for v in e["r"]["vals"]]
+            lhs = self._value(e["l"])
             if self.ci_strings and all(
                 _literal_category(v) == "str" for v in e["r"]["vals"]
             ):
-                lhs_in = F.lower(lhs_in)
+                lhs = f"lower({lhs})"
                 vals = [v.lower() for v in vals]
-            c = lhs_in.isin(vals)
-            return ~c if e["neg"] else c
+            c = f"({lhs} IN ({', '.join(_sql_lit(v) for v in vals)}))"
+            return f"(NOT {c})" if e["neg"] else c
         if k == "cmp":
-            if not (agg_ok and e["l"]["kind"] == "agg"):
-                self._check_comparable(e["l"], e["r"], e["op"])
-            lhs = (
-                self._resolve_agg(e["l"]) if agg_ok and e["l"]["kind"] == "agg"
-                else _value_col(e["l"], self.fsm)
-            )
-            if e["r"]["kind"] == "datelit":
+            op, r = e["op"], e["r"]
+            if agg_ok and e["l"]["kind"] == "agg":
+                lhs = self._resolve_agg(e["l"])
+            else:
+                self._check_comparable(e["l"], r, op)
+                lhs = self._value(e["l"])
+            if r["kind"] == "datelit":
                 # D18: range semantics — '=' is containment, '<' precedes
                 # the range start, '>' follows the range end
-                start, end = _datelit_range(e["r"], self.today)
-                return {
-                    "=": (lhs >= start) & (lhs < end),
-                    "!=": (lhs < start) | (lhs >= end),
-                    "<": lhs < start,
-                    "<=": lhs < end,
-                    ">": lhs >= end,
-                    ">=": lhs >= start,
-                }[e["op"]]
-            if e["r"]["kind"] == "null":
+                start, end = _datelit_sql(r, self.today)
+                return _RANGE_CMP[op].format(l=lhs, s=start, e=end)
+            if r["kind"] == "null":
                 # D20: SOQL '= NULL' is a null test, not ANSI unknown
-                if e["op"] == "=":
-                    return lhs.isNull()
-                if e["op"] == "!=":
-                    return lhs.isNotNull()
-                raise SoqlError(f"SOQL: operator {e['op']} with NULL")
-            rhs = _literal_col(e["r"])
-            if self.ci_strings and _literal_category(e["r"]) == "str":
+                if op == "=":
+                    return f"({lhs} IS NULL)"
+                if op == "!=":
+                    return f"({lhs} IS NOT NULL)"
+                raise SoqlError(f"SOQL: operator {op} with NULL")
+            rhs = _sql_lit(r["v"])
+            if self.ci_strings and _literal_category(r) == "str":
                 # Salesforce text collation: string comparisons are
                 # case-insensitive (like D3's LIKE). Folding BOTH sides
                 # through lower() keeps ordering comparisons consistent
                 # with equality under the same collation.
-                lhs = F.lower(lhs)
-                rhs = F.lower(rhs)
-            return {
-                "=": lhs == rhs, "!=": lhs != rhs, "<": lhs < rhs,
-                "<=": lhs <= rhs, ">": lhs > rhs, ">=": lhs >= rhs,
-            }[e["op"]]
+                lhs, rhs = f"lower({lhs})", f"lower({rhs})"
+            return f"({lhs} {op} {rhs})"
         raise SoqlError(f"SOQL: bad boolean expr {e}")
 
 
@@ -1610,7 +1632,8 @@ def soql_to_df(
     ``resolve`` maps an object name to its DataFrame; the default resolves
     case-insensitively against the session catalog's temp views (use
     ``sources.catalog.register_views`` first), replacing the reference's
-    CamelCase-mangling normalizer (C6) with case-insensitive lookup.
+    CamelCase-mangling normalizer (C6) with case-insensitive lookup. Each
+    object is resolved once per call.
 
     ``relationships`` enables D8 dot-path lookups and D9 nested child
     subselects (see :class:`RelationshipRegistry`); the fixture schema's
@@ -1621,12 +1644,18 @@ def soql_to_df(
     case-insensitive, D3). Default False: the conformance contract
     compares strings bytewise like the DuckDB oracle; enable it when
     replaying queries whose source of truth was Salesforce itself.
+
+    The statement is printed as one Spark SQL text over per-call temp
+    views; that text is logged at DEBUG on this module's logger.
     """
     if resolve is None:
         def resolve(name: str) -> DataFrame:  # noqa: F811
             return spark.table(name.lower())
 
     q = _Parser(tokenize(soql), soql).parse_query()
-    return _Lowerer(
-        resolve, relationships, today, fiscal_start_month, ci_strings
+    binder = _Binder(spark, resolve)
+    sql, _ = _Lowerer(
+        binder, relationships, today, fiscal_start_month, ci_strings
     ).lower(q)
+    _log.debug("soql_to_df: %s", sql)
+    return binder.sql(sql)
