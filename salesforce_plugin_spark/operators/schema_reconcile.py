@@ -203,8 +203,9 @@ def create_table_ddl(
 
 
 def missing_columns(spark: SparkSession, table: str, descs: list[FieldDescriptor]) -> list[FieldDescriptor]:
-    """B5 (reference :179-188): source-minus-destination, add-only."""
-    existing = {c.name.lower() for c in spark.catalog.listColumns(table)}
+    """B5 (reference :179-188): source-minus-destination, add-only, against the
+    analyzed table's columns (no Spark job, unlike ``catalog.listColumns``)."""
+    existing = {c.lower() for c in spark.table(table).columns}
     return [d for d in descs if d.name not in existing]
 
 
@@ -318,13 +319,15 @@ def redshift_copy_command(
 def load_with_reconciliation(
     spark: SparkSession, df: DataFrame, table: str, descs: list[FieldDescriptor]
 ) -> None:
-    """End-to-end §3.3 restatement: reconcile DDL, then append the aligned
-    frame. Replaces describe→DDL→JSONPath→COPY with four driver-side lines."""
+    """End-to-end §3.3 restatement: reconcile DDL, then append through one
+    projection of the destination schema read after the DDL — each field, in
+    destination order, takes the same-named source column (matched
+    case-insensitively) or a NULL, cast to the field's type."""
     reconcile_table(spark, table, descs)
-    dest_order = [c.name for c in spark.catalog.listColumns(table)]
-    aligned = align_to_destination(df, dest_order)
-    target_schema = spark.table(table).schema
-    casted = aligned.select(
-        *[F.col(f.name).cast(f.dataType) for f in target_schema.fields]
-    )
-    casted.write.mode("append").insertInto(table)
+    src = {c.lower() for c in df.columns}
+    cols = [
+        (F.col(f.name) if f.name.lower() in src else F.lit(None))
+        .cast(f.dataType).alias(f.name)
+        for f in spark.table(table).schema.fields
+    ]
+    df.select(*cols).write.mode("append").insertInto(table)

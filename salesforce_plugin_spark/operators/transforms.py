@@ -80,9 +80,7 @@ def coerce_to_epoch_seconds(df: DataFrame, temporal_cols: list[str] | None = Non
         temporal_cols = [
             f.name for f in df.schema.fields if f.dataType.typeName() in ("timestamp", "date")
         ]
-    for c in temporal_cols:
-        df = df.withColumn(c, F.unix_seconds(F.col(c).cast("timestamp")))
-    return df
+    return df.withColumns({c: F.unix_seconds(F.col(c).cast("timestamp")) for c in temporal_cols})
 
 
 def decode_epoch_millis(col: Column | str) -> Column:
@@ -101,9 +99,7 @@ def add_fetch_time(df: DataFrame, col_name: str = "time_fetched_from_salesforce"
 def truncate_varchar(df: DataFrame, lengths: dict[str, int]) -> DataFrame:
     """C7: TRUNCATECOLUMNS semantics — oversize strings silently truncated to
     the column's declared length (``salesforce_schema_to_redshift_operator.py:283``)."""
-    for c, n in lengths.items():
-        df = df.withColumn(c, F.substring(F.col(c), 1, n))
-    return df
+    return df.withColumns({c: F.substring(F.col(c), 1, n) for c, n in lengths.items()})
 
 
 def union_evolve(dfs: list[DataFrame]) -> DataFrame:

@@ -42,9 +42,8 @@ def write_csv(df: DataFrame, path: str, **opts) -> None:
     """A11: CSV with header, newline-scrubbed string cells (C4) so rows stay
     single-line, overwrite-idempotent."""
     df = _prepare(df, **opts)
-    for f in df.schema.fields:
-        if f.dataType.typeName() == "string":
-            df = df.withColumn(f.name, scrub_newlines(F.col(f.name)))
+    strings = [f.name for f in df.schema.fields if f.dataType.typeName() == "string"]
+    df = df.withColumns({c: scrub_newlines(F.col(c)) for c in strings})
     df.write.mode("overwrite").option("header", True).csv(path)
 
 

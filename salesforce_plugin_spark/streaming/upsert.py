@@ -516,14 +516,9 @@ def upsert_batch(
     )
     # materialize before overwriting the path we just read
     latest = latest.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        latest.write.mode("overwrite").partitionBy(partition_col).parquet(
-            table_path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # a writer option, unlike the session conf, does not reach other threads
+    writer = latest.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy(partition_col).parquet(table_path)
 
 
 def run_stream_upsert(

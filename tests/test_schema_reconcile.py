@@ -201,3 +201,64 @@ def test_redshift_copy_command_shape():
     assert "{creds}" in cmd and "aws_secret_access_key={creds}" in cmd
     assert "TIMEFORMAT 'epochmillisecs'" in cmd
     assert "TRUNCATECOLUMNS COMPUPDATE OFF STATUPDATE OFF" in cmd
+
+
+# --- §3.3 end to end: cost and case handling of the aligned load ----------
+
+def test_two_phase_load_runs_one_spark_job_per_insert(spark):
+    """CREATE from a describe list without the drift columns and load, then
+    the full list (two ALTERs plus a null-filled compound component) and
+    load again: the destination schema is read without Spark jobs, so the
+    only jobs are the two ``insertInto`` writes."""
+    from salesforce_plugin_spark.operators.elt import SchemaReconcileLoad
+
+    describe = [
+        {"name": "C_CustKey", "soapType": "xsd:int"},
+        {"name": "C_Name", "soapType": "xsd:string", "length": 40},
+        {"name": "C_NationKey", "soapType": "xsd:int"},
+        {"name": "C_AcctBal", "soapType": "xsd:double"},
+        {"name": "C_MktSegment", "soapType": "xsd:picklist", "length": 20},
+        {"name": "BillingAddress", "soapType": "urn:address"},
+        {"name": "BillingCity", "soapType": "xsd:string", "length": 40,
+         "compoundFieldName": "BillingAddress"},
+    ]
+    drift = ["c_nationkey", "c_mktsegment"]
+    base = spark.createDataFrame(
+        [(1, "a", 7, 1.5, "AUTO"), (2, "b", 8, 2.5, "BUILDING")],
+        "c_custkey long, c_name string, c_nationkey long, c_acctbal double, "
+        "c_mktsegment string",
+    )
+    first = [d for d in describe if d["name"].lower() not in drift]
+    spark.sql("DROP TABLE IF EXISTS t_two_phase")
+    sc, group = spark.sparkContext, "test_two_phase_load"
+    sc.setJobGroup(group, "two-phase reconcile load")
+    try:
+        SchemaReconcileLoad("t_two_phase", first).execute(spark, base.drop(*drift))
+        SchemaReconcileLoad("t_two_phase", describe).execute(spark, base)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    rows = spark.table("t_two_phase").orderBy("c_custkey", "c_nationkey").collect()
+    assert [tuple(r) for r in rows] == [
+        (1, "a", 1.5, None, None, None), (1, "a", 1.5, None, 7, "AUTO"),
+        (2, "b", 2.5, None, None, None), (2, "b", 2.5, None, 8, "BUILDING"),
+    ]
+    spark.sql("DROP TABLE t_two_phase")
+
+
+def test_load_into_mixed_case_destination_keeps_values(spark):
+    """Destination columns declared in mixed case match a lower-case source
+    frame case-insensitively: values land, not NULLs."""
+    from salesforce_plugin_spark.operators.schema_reconcile import (
+        load_with_reconciliation,
+    )
+
+    spark.sql("DROP TABLE IF EXISTS t_mixed_case")
+    spark.sql("CREATE TABLE t_mixed_case (Id INT, Name STRING)")
+    df = spark.createDataFrame([(1, "x"), (2, "y")], "id long, name string")
+    load_with_reconciliation(
+        spark, df, "t_mixed_case", [fd("Id", "int"), fd("Name", "string")]
+    )
+    rows = spark.table("t_mixed_case").orderBy("id").collect()
+    assert [tuple(r) for r in rows] == [(1, "x"), (2, "y")]
+    spark.sql("DROP TABLE t_mixed_case")

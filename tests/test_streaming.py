@@ -498,3 +498,49 @@ def test_stream_cusum_equals_batch(spark, tmp_path):
         ).collect()
     )
     assert got == want and len(got) == 8
+
+
+def test_stream_upsert_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """The dynamic partition overwrite is a writer option: the upsert never
+    sets ``partitionOverwriteMode`` on the session, which every thread's
+    writes would see, and a batch still rewrites only its own partitions."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from salesforce_plugin_spark.streaming.upsert import run_stream_upsert
+
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    schema = "id long, day int, v string"
+    src = str(tmp_path / "src")
+    for rows in ([(i, i % 3, "v1") for i in range(6)], [(0, 0, "v2")]):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    table = str(tmp_path / "table")
+    run_stream_upsert(stream, table, str(tmp_path / "ckpt"), ["id"], "v", "day")
+    got = {r.id: r.v for r in spark.read.parquet(table).collect()}
+    assert got == {0: "v2", 1: "v1", 2: "v1", 3: "v1", 4: "v1", 5: "v1"}
+    assert not [k for k in keys if "partitionOverwriteMode" in k]
+
+
+def test_upsert_corrupt_table_raises_and_keeps_files(spark, tmp_path):
+    """A partition directory holding a non-parquet file is a read failure,
+    not a first batch: ``upsert_batch`` raises and overwrites nothing."""
+    from salesforce_plugin_spark.streaming.upsert import upsert_batch
+
+    part = tmp_path / "table" / "day=1"
+    part.mkdir(parents=True)
+    bad = part / "part-000.parquet"
+    bad.write_bytes(b"not parquet")
+    batch = spark.createDataFrame([(1, 1, "a")], "id long, day int, v string")
+    with pytest.raises(Exception):
+        upsert_batch(str(tmp_path / "table"), batch, ["id"], "v", "day")
+    assert bad.read_bytes() == b"not parquet"
+    assert [p.name for p in part.iterdir()] == ["part-000.parquet"]
