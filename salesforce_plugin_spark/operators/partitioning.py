@@ -334,33 +334,32 @@ def global_cumsum(
         "__pid", F.spark_partition_id()
     )
     w_in = Window.partitionBy("__pid").orderBy(*order_cols)
-    tagged = part
-    for c in sum_cols:
-        tagged = tagged.withColumn(
-            f"__in_{c}", F.sum(c).over(w_in).cast("long")
-        )
-    tagged = tagged.localCheckpoint(eager=False)
+    tagged = part.withColumns(
+        {f"__in_{c}": F.sum(c).over(w_in).cast("long") for c in sum_cols}
+    ).localCheckpoint(eager=False)
     w_off = (
         Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = tagged.groupBy("__pid").agg(
         *[F.sum(c).cast("long").alias(f"__tot_{c}") for c in sum_cols]
+    ).withColumns(
+        {
+            f"__off_{c}": F.coalesce(
+                F.sum(f"__tot_{c}").over(w_off), F.lit(0)
+            ).cast("long")
+            for c in sum_cols
+        }
     )
-    for c in sum_cols:
-        offsets = offsets.withColumn(
-            f"__off_{c}",
-            F.coalesce(F.sum(f"__tot_{c}").over(w_off), F.lit(0)).cast(
-                "long"
-            ),
-        )
     out = tagged.join(
         F.broadcast(
             offsets.select("__pid", *[f"__off_{c}" for c in sum_cols])
         ),
         "__pid",
     )
-    for c in sum_cols:
-        out = out.withColumn(
-            f"cum_{c}", (F.col(f"__in_{c}") + F.col(f"__off_{c}")).cast("long")
-        ).drop(f"__in_{c}", f"__off_{c}")
+    out = out.withColumns(
+        {
+            f"cum_{c}": (F.col(f"__in_{c}") + F.col(f"__off_{c}")).cast("long")
+            for c in sum_cols
+        }
+    ).drop(*[f"__in_{c}" for c in sum_cols], *[f"__off_{c}" for c in sum_cols])
     return out.drop("__pid")

@@ -22,6 +22,22 @@ lazily.
 Exactly-once: the checkpoint makes batch replay idempotent — re-running a
 batch re-derives the same merged partitions (last-writer-wins by the
 version column is deterministic given unique (key, version) pairs).
+
+Every ``run_stream_*`` face drains its stream through :func:`_drain`
+and folds each micro-batch in one of three state shapes:
+
+- per-batch ``__b=`` partials (cm, histogram, additive counts/sums,
+  MAX registers, distinct sets, active days, near-dedup): each batch
+  overwrites its own partition; one ``_*_reducer`` per face is the
+  merge its fold's auto-compaction, its ``compact_*`` wrapper and its
+  ``read_*`` reader all apply (:func:`_partials_fold`,
+  :func:`_read_merged`);
+- a fenced ``__c=`` carry (CUSUM, inter-arrival): one row per key,
+  rewritten per batch behind an immutable commit marker
+  (:func:`_carry_fold`, :func:`commit_carry`);
+- a read-modify-write table (upsert, SCD2): the batch merges into
+  the table read by :func:`_read_existing`, whose ``None`` is the
+  first batch and nothing else.
 """
 
 from __future__ import annotations
@@ -30,6 +46,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 
 # --- __b=<batch_id> partitioned-state housekeeping ---------------------
@@ -235,7 +252,7 @@ def compact_batch_partials(
 def _counts_reducer(group_cols: list[str]):
     """The additive-count merge — ONE definition shared by the read
     path, the manual compact wrapper, and the fold loop's auto-compact
-    (review finding: twin lambdas drift)."""
+    (twin lambdas would drift apart)."""
     return lambda df: df.groupBy(*group_cols).agg(
         F.sum("n").cast("long").alias("n")
     )
@@ -314,6 +331,30 @@ def _maybe_auto_compact(spark, state_dir, batch_id, every, reduce_fn):
         compact_batch_partials(spark, state_dir, int(batch_id), reduce_fn)
 
 
+def _partials_fold(state_dir: str, partials, reduce_fn, every):
+    """The ``foreachBatch`` fold of a ``__b=`` face: write
+    ``partials(batch)`` as the batch's own partition
+    (:func:`write_batch_partials`), then auto-compact with the face's
+    merge ``reduce_fn`` (:func:`_maybe_auto_compact`)."""
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        write_batch_partials(partials(batch), state_dir, batch_id)
+        _maybe_auto_compact(
+            batch.sparkSession, state_dir, batch_id, every, reduce_fn
+        )
+
+    return fold
+
+
+def _read_merged(spark, state_dir: str, reduce_fn) -> DataFrame:
+    """A ``__b=`` face's current state: every partition merged by the
+    face's ``reduce_fn`` (the reducer's grouping columns project the
+    discovered ``__b`` column away). An interrupted compaction is
+    completed first, so the merge never sees a half-deleted layout."""
+    _recover_compaction(spark, state_dir)
+    return reduce_fn(spark.read.parquet(state_dir))
+
+
 # --- fenced-carry protocol (order-dependent one-row-per-key state) -----
 #
 # The additive/SET folds above are safe under replay because each batch
@@ -325,9 +366,9 @@ def _maybe_auto_compact(spark, state_dir, batch_id, every, reduce_fn):
 # already-advanced carry — double-counting. The fix is a versioned
 # carry with an IMMUTABLE per-version commit marker as the replay
 # fence (no mutable pointer file anywhere: a truncate-in-place
-# pointer update has a crash window that destroys the fence — the
-# round-9 review finding; an existence-only marker has no partial
-# state, it is either there or not):
+# pointer update has a crash window that destroys the fence; an
+# existence-only marker has no partial state, it is either there or
+# not):
 #
 #   1. fold reads the fence (max ``__c=<id>`` dir holding a
 #      ``_CARRY_COMMITTED`` marker); a batch id ≤ fence is a NO-OP
@@ -418,6 +459,24 @@ def commit_carry(carry: DataFrame, state_dir: str, batch_id: int) -> None:
             fs.delete(hp(os.path.join(state_dir, name)), True)
 
 
+def _carry_fold(state_dir: str, step):
+    """The ``foreachBatch`` fold of a fenced-carry face: skip an empty
+    batch, skip a replay at or below the fence (its outputs and carry
+    are already durable), otherwise call ``step(batch, batch_id,
+    carry)`` with the last committed carry (None before the first
+    commit; a corrupt/legacy state dir raises, never reinitializes)."""
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        if not batch.take(1):
+            return
+        spark = batch.sparkSession
+        if int(batch_id) <= carry_folded_through(spark, state_dir):
+            return
+        step(batch, batch_id, read_current_carry(spark, state_dir))
+
+    return fold
+
+
 def _assert_batches_in_order(
     batch: DataFrame,
     carry_last_ts: DataFrame,
@@ -430,12 +489,12 @@ def _assert_batches_in_order(
     every row of the batch must carry a timestamp ≥ its key's
     last-FOLDED timestamp (``carry_last_ts``: key cols + a single
     ``__cts`` BIGINT column, microseconds; NULL = unknown/legacy —
-    skipped). The round-9 driver window showed why this must be an
-    ERROR and not a silent fold: an out-of-order batch produces
-    rows/schema-matching but value-wrong output (hash mismatch) that
-    nothing downstream can detect. The probe is one inner join on the
-    per-key batch minimum against the one-row-per-key carry —
-    O(batch + keys) — and collects at most ONE violating row."""
+    skipped). This must be an ERROR and not a silent fold: an
+    out-of-order batch produces rows/schema-matching but value-wrong
+    output (hash mismatch) that nothing downstream can detect. The
+    probe is one inner join on the per-key batch minimum against the
+    one-row-per-key carry — O(batch + keys) — and collects at most ONE
+    violating row."""
     viol = (
         batch.groupBy(*key_cols)
         .agg(F.min(ts_us).alias("__bmin"))
@@ -485,6 +544,32 @@ def _assert_integral_sum_cols(df: DataFrame, sum_cols: list[str]) -> None:
             )
 
 
+def _read_existing(spark, path: str) -> DataFrame | None:
+    """The parquet state at ``path``, or None when it does not exist yet
+    (the first batch). Only the read is guarded: any OTHER failure
+    (a corrupt file, a schema the merge cannot resolve) must raise —
+    treating it as a first batch would overwrite durable state with
+    batch-only rows."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
+
+
+def _drain(stream: DataFrame, checkpoint: str, fold):
+    """Run ``fold(batch, batch_id)`` over every micro-batch available
+    now, under ``checkpoint``; returns the finished StreamingQuery (a
+    fold's exception surfaces from ``awaitTermination``)."""
+    q = (
+        stream.writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
 def upsert_batch(
     table_path: str,
     batch: DataFrame,
@@ -495,19 +580,13 @@ def upsert_batch(
     """Merge one (batch) DataFrame into the parquet table at ``table_path``,
     keeping the highest-``version_col`` row per key, rewriting only the
     partitions present in the batch."""
-    from pyspark.errors import AnalysisException
-
-    spark = batch.sparkSession
     touched = batch.select(partition_col).distinct()
-    try:
-        current = spark.read.parquet(table_path).join(
-            touched, partition_col, "left_semi"
+    current = _read_existing(batch.sparkSession, table_path)
+    merged = batch
+    if current is not None:
+        merged = current.join(touched, partition_col, "left_semi").unionByName(
+            batch
         )
-        merged = current.unionByName(batch)
-    except AnalysisException:  # first batch: table does not exist yet —
-        merged = batch         # any OTHER read failure must raise: treating
-                               # it as first-batch would dynamic-overwrite
-                               # touched partitions with batch-only rows
     w = Window.partitionBy(*key_cols).orderBy(F.col(version_col).desc())
     latest = (
         merged.withColumn("__rn", F.row_number().over(w))
@@ -532,18 +611,13 @@ def run_stream_upsert(
     """Drain available input through the upsert sink (availableNow); returns
     the finished StreamingQuery. The result parquet at ``table_path`` holds
     exactly one row per key — the newest by ``version_col``."""
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, _id: upsert_batch(
-                table_path, b, key_cols, version_col, partition_col
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        stream,
+        checkpoint,
+        lambda b, _id: upsert_batch(
+            table_path, b, key_cols, version_col, partition_col
+        ),
     )
-    q.awaitTermination()
-    return q
 
 
 def run_stream_scd2(
@@ -568,17 +642,16 @@ def run_stream_scd2(
     ingest (file mtime order, Kafka per-key partition order). Late rows
     that time-travel before a key's loaded history need a source-feed
     reprocess, exactly as in the batch incremental path. CHECKED at
-    runtime since round 10 — refined in round 11 (ADVICE r10 high):
-    the stored table compresses non-change observations away, so its
-    per-key max ts is the last CHANGE, not the last OBSERVATION, and a
-    legitimate replay of a batch whose key had a change followed by
-    later non-change rows looks like a frontier straddle. Raising on
-    the straddle alone therefore wedged legal replays permanently
-    (every redelivery re-raised). The guard now raises only when a
-    straddling slice's re-collapse actually CHANGES the key's stored
-    history — an identical re-collapse is exactly the documented
-    idempotent-replay case and is absorbed; a differing one is
-    out-of-order ingest and still errors. A slice entirely in the past
+    runtime: the stored table compresses non-change observations
+    away, so its per-key max ts is the last CHANGE, not the last
+    OBSERVATION, and a legitimate replay of a batch whose key had a
+    change followed by later non-change rows looks like a frontier
+    straddle. Raising on the straddle alone would wedge legal replays
+    permanently (every redelivery re-raises). The guard raises only
+    when a straddling slice's re-collapse actually CHANGES the key's
+    stored history — an identical re-collapse is exactly the
+    documented idempotent-replay case and is absorbed; a differing
+    one is out-of-order ingest and errors. A slice entirely in the past
     is absorbed without even the compare — this fold has no batch-id
     fence, so checkpointless re-folds of old batches are legal and
     must stay no-ops.
@@ -597,28 +670,19 @@ def run_stream_scd2(
     )
 
     def fold(batch: DataFrame, _id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
-        try:
-            current = spark.read.parquet(table_path)
-            exists = True
-        except AnalysisException:  # first batch: no table yet — any OTHER
-            exists = False         # read failure must raise, not silently
-                                   # restart history from scratch
-        if exists:
+        current = _read_existing(batch.sparkSession, table_path)
+        if current is not None:
             us = F.unix_micros(F.col(ts_col))
-            # Order guard (round 10, refined round 11): the stored
-            # frontier is the last CHANGE ts (non-change observations
-            # are compressed away), so a frontier straddle alone does
-            # not prove out-of-order ingest — a legal replay of a
-            # change-then-nonchange batch straddles too (ADVICE r10
-            # high: raising unconditionally wedged such replays
-            # forever). Probe for straddling keys first (O(batch +
-            # keys), one row); only if any exist, compare their
-            # re-collapsed history against the stored one and raise
-            # only on an ACTUAL difference. An entirely-past slice is
-            # absorbed without the compare (idempotent replay).
+            # Order guard: the stored frontier is the last CHANGE ts
+            # (non-change observations are compressed away), so a
+            # frontier straddle alone does not prove out-of-order
+            # ingest — a legal replay of a change-then-nonchange batch
+            # straddles too, and raising unconditionally would wedge
+            # such replays forever. Probe for straddling keys first
+            # (O(batch + keys), one row); only if any exist, compare
+            # their re-collapsed history against the stored one and
+            # raise only on an ACTUAL difference. An entirely-past
+            # slice is absorbed without the compare (idempotent replay).
             frontier = current.groupBy(*key_cols).agg(
                 F.max(us).alias("__cts")
             )
@@ -670,14 +734,7 @@ def run_stream_scd2(
             table_path
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, fold)
 
 
 def run_stream_near_dedup(
@@ -701,9 +758,9 @@ def run_stream_near_dedup(
 
     State under ``state_dir``: ``bands/`` — the corpus (id, band, bucket)
     table; ``assign/`` — the accumulated (id, cluster_id) assignments.
-    Both are per-batch ``__b=<id>`` partitions (round 8, parity with the
-    rest of the fold family): a foreachBatch retry OVERWRITES its own
-    slice instead of appending a duplicate, and a replayed batch
+    Both are per-batch ``__b=<id>`` partitions, like the rest of the
+    fold family: a foreachBatch retry OVERWRITES its own slice
+    instead of appending a duplicate, and a replayed batch
     recomputes the same assignment — the lazily-read corpus may already
     contain the crashed attempt's band rows, but band rows are a SET and
     every reduction over them is a MIN, so duplicates cannot change any
@@ -715,10 +772,6 @@ def run_stream_near_dedup(
     cost is the batch's minhash pipeline plus a touched-bucket semi-join
     into the bands table — never a corpus rescan.
     """
-    import os
-
-    from pyspark.errors import AnalysisException
-
     from salesforce_plugin_spark.functions.dedup import (
         minhash_signatures_portable,
         near_dedup_apply,
@@ -735,7 +788,7 @@ def run_stream_near_dedup(
         # a crash between the compaction manifest write and the
         # tmp -> __b=-1 rename leaves a torn layout that the raw read
         # below would otherwise see as a corpus missing band rows
-        # (wrong cluster assignments, durably written) — ADVICE r9
+        # (wrong cluster assignments, durably written)
         _recover_compaction(spark, bands_path)
         _recover_compaction(spark, assign_path)
         batch_local = batch.localCheckpoint(eager=True)
@@ -747,18 +800,11 @@ def run_stream_near_dedup(
             num_hashes,
             bands,
         )
-        try:
-            corpus_bands = spark.read.parquet(bands_path).select(
-                id_col, "band", "bucket"
-            )
-            exists = True
-        except AnalysisException:  # first batch: no state yet — any OTHER
-            exists = False          # read failure must raise, not silently
-                                    # restart the corpus from scratch
-        if exists:
+        corpus = _read_existing(spark, bands_path)
+        if corpus is not None:
             assigned, new_bands = near_dedup_apply(
-                corpus_bands, batch_local, id_col, text_col,
-                num_hashes, bands, shingle_n,
+                corpus.select(id_col, "band", "bucket"), batch_local,
+                id_col, text_col, num_hashes, bands, shingle_n,
             )
         else:
             assigned = near_dedup_clusters_portable(
@@ -782,14 +828,7 @@ def run_stream_near_dedup(
             _distinct_reducer([id_col, "band", "bucket"]),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, fold)
 
 
 def read_near_dedup_assignments(spark, state_dir: str, id_col: str):
@@ -798,13 +837,10 @@ def read_near_dedup_assignments(spark, state_dir: str, id_col: str):
     partition column; completes any interrupted compaction first).
     Distinct: a fenced replay can never duplicate a row, but a reader
     must not depend on that invariant for correctness."""
-    import os
-
-    _recover_compaction(spark, os.path.join(state_dir, "assign"))
-    return (
-        spark.read.parquet(os.path.join(state_dir, "assign"))
-        .select(id_col, "cluster_id")
-        .distinct()
+    return _read_merged(
+        spark,
+        os.path.join(state_dir, "assign"),
+        _distinct_reducer([id_col, "cluster_id"]),
     )
 
 
@@ -819,9 +855,9 @@ def run_stream_cm(
 ):
     """Streaming count-min maintenance: each micro-batch's sketch grid
     lands in its own ``__b=<batch_id>`` partition under ``state_dir``
-    (:func:`write_batch_partials` — round 9: off the flat append, so a
-    ``foreachBatch`` retry OVERWRITES its own slice instead of
-    appending a duplicate grid the reader's sum would double-count);
+    (:func:`write_batch_partials`: a ``foreachBatch`` retry
+    OVERWRITES its own slice instead of appending a duplicate grid the
+    reader's sum would double-count);
     because a count-min sketch is purely additive (union of sketches =
     element-wise sum of grids), the summed accumulated state is
     bit-identical to one batch sketch over everything streamed so far —
@@ -833,39 +869,20 @@ def run_stream_cm(
     """
     from salesforce_plugin_spark.functions.sketch import cm_sketch
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        write_batch_partials(
-            cm_sketch(batch, value_col, width=width, depth=depth),
-            state_dir,
-            batch_id,
-        )
-        _maybe_auto_compact(
-            batch.sparkSession, state_dir, batch_id, auto_compact_every,
-            _cm_reducer(),
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    fold = _partials_fold(
+        state_dir,
+        lambda b: cm_sketch(b, value_col, width=width, depth=depth),
+        _cm_reducer(),
+        auto_compact_every,
     )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, fold)
 
 
 def read_cm_state(spark, state_dir: str) -> DataFrame:
     """Sum the accumulated per-batch count-min grids into the current
     sketch — ≤ depth·width rows out, partial-combined map-side.
     Completes any interrupted compaction first."""
-    import pyspark.sql.functions as F
-
-    _recover_compaction(spark, state_dir)
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("row", "bucket")
-        .agg(F.sum("n").alias("n"))
-    )
+    return _read_merged(spark, state_dir, _cm_reducer())
 
 
 def compact_cm_state(spark, state_dir: str, watermark: int) -> int:
@@ -889,9 +906,9 @@ def run_stream_histogram(
 ):
     """Streaming quantile-sketch maintenance: each micro-batch's bounded
     histogram lands in its own ``__b=<batch_id>`` partition
-    (:func:`write_batch_partials` — round 9: off the flat append, so a
-    ``foreachBatch`` retry overwrites its own slice instead of
-    appending a duplicate the reader's sum would double-count);
+    (:func:`write_batch_partials`: a ``foreachBatch`` retry
+    overwrites its own slice instead of appending a duplicate the
+    reader's sum would double-count);
     histograms are purely additive (union = element-wise sum), so the
     summed state is bit-identical to one batch histogram over
     everything streamed — the equivalence q_stream_quantiles gates
@@ -903,39 +920,20 @@ def run_stream_histogram(
     ``sketch.quantiles_from_counts``."""
     from salesforce_plugin_spark.functions.sketch import histogram_counts
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        write_batch_partials(
-            histogram_counts(batch, value_col, lo, hi, n_bins),
-            state_dir,
-            batch_id,
-        )
-        _maybe_auto_compact(
-            batch.sparkSession, state_dir, batch_id, auto_compact_every,
-            _histogram_reducer(),
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    fold = _partials_fold(
+        state_dir,
+        lambda b: histogram_counts(b, value_col, lo, hi, n_bins),
+        _histogram_reducer(),
+        auto_compact_every,
     )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, fold)
 
 
 def read_histogram_state(spark, state_dir: str) -> DataFrame:
     """Sum the accumulated per-batch histograms into the current
     sketch — ≤ n_bins rows out, partial-combined map-side. Completes
     any interrupted compaction first."""
-    import pyspark.sql.functions as F
-
-    _recover_compaction(spark, state_dir)
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return _read_merged(spark, state_dir, _histogram_reducer())
 
 
 def compact_histogram_state(spark, state_dir: str, watermark: int) -> int:
@@ -973,18 +971,18 @@ def run_stream_cusum(
 
     REQUIRES batches in per-key observation order (time-sliced files
     with ascending mtimes, the SCD2 stream contract — an out-of-order
-    row would need a rebuild from its timestamp forward). Round 10:
-    the precondition is now CHECKED — the carry stores each key's
+    row would need a rebuild from its timestamp forward). The
+    precondition is CHECKED — the carry stores each key's
     last-folded timestamp (``__cts``, microseconds) and a batch
     holding an older row RAISES instead of silently folding wrong
-    CUSUM values (the round-9 driver hash-mismatch class). Keys
-    absent from a batch keep their carry unchanged (round-10 fix —
-    the previous left join dropped them, restarting their CUSUM at
-    the key's next appearance). A round-9 carry without ``__cts``
-    keeps folding (guard skipped until the first round-10 commit
+    CUSUM values (a hash mismatch nothing downstream detects). Keys
+    absent from a batch keep their carry unchanged (a plain left join
+    would drop them, restarting their CUSUM at the key's next
+    appearance). A carry without ``__cts`` (the earlier two-column
+    layout) keeps folding (guard skipped until the first commit
     upgrades the schema in place).
 
-    Replay safety (round 9): the carry goes through the fenced-carry
+    Replay safety: the carry goes through the fenced-carry
     protocol (:func:`commit_carry`) — a ``foreachBatch`` retry of an
     already-committed batch id is a no-op instead of folding the batch
     into an already-advanced carry (double-count); a retry of an
@@ -995,17 +993,9 @@ def run_stream_cusum(
     so a retry overwrites its own alarm slice instead of appending
     duplicates.
     """
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
     tiebreaks = tiebreak_cols or []
 
-    def fold(batch, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        if int(batch_id) <= carry_folded_through(spark, state_dir):
-            return  # fenced replay: alarms + carry already durable
+    def step(batch, batch_id: int, carry) -> None:
         order = [F.col(ts_col), F.col(value_col)] + [
             F.col(c) for c in tiebreaks
         ]
@@ -1022,17 +1012,15 @@ def run_stream_cusum(
             *[F.col(c) for c in tiebreaks],
             F.sum(dev).over(w).alias("__lc"),
         ).withColumn("__lm", F.min("__lc").over(w))
-        carry = read_current_carry(spark, state_dir)
-        if carry is None:  # first batch; a corrupt/legacy state dir
-            # raises inside read_current_carry, never reinitializes
-            carry = spark.createDataFrame(
+        if carry is None:  # first batch
+            carry = batch.sparkSession.createDataFrame(
                 [],
                 local.select(*key_cols)
                 .schema.add("__ccum", "long")
                 .add("__cm", "long")
                 .add("__cts", "long"),
             )
-        elif "__cts" not in carry.columns:  # round-9 carry: last-folded
+        elif "__cts" not in carry.columns:  # two-column carry: last-folded
             # ts unknown — guard skipped once, schema upgraded on commit
             carry = carry.withColumn("__cts", F.lit(None).cast("long"))
         _assert_batches_in_order(
@@ -1090,8 +1078,8 @@ def run_stream_cusum(
             )
         )
         # keys ABSENT from this batch keep their carry verbatim — the
-        # anti-join side costs O(carry), one row per key (round-10 fix:
-        # without it a key skipping a batch restarted its CUSUM from 0)
+        # anti-join side costs O(carry), one row per key (without it a
+        # key skipping a batch would restart its CUSUM from 0)
         carried_over = carry.join(
             local.select(*key_cols).distinct(), key_cols, "left_anti"
         ).select(*key_cols, "__ccum", "__cm", "__cts")
@@ -1099,14 +1087,7 @@ def run_stream_cusum(
             new_carry.unionByName(carried_over), state_dir, batch_id
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, _carry_fold(state_dir, step))
 
 
 def run_stream_active_days(
@@ -1128,32 +1109,17 @@ def run_stream_active_days(
     regardless of event volume; compact by rewriting the deduped set.
     Read with :func:`read_rolling_distinct`.
     """
-    import pyspark.sql.functions as F
-
-    def fold(batch, batch_id: int) -> None:
-        # __b= partition per batch (round 8, parity with the set fold):
-        # storage-idempotent replay + compact_distinct_set eligibility
-        write_batch_partials(
-            batch.select(
-                F.col(key_col).alias("key"),
-                F.to_date(F.col(ts_col)).alias("day"),
-            ).distinct(),
-            state_dir,
-            batch_id,
-        )
-        _maybe_auto_compact(
-            batch.sparkSession, state_dir, batch_id, auto_compact_every,
-            _distinct_reducer(["key", "day"]),
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    # __b= partition per batch, like the set fold: storage-idempotent
+    # replay + compact_distinct_set eligibility
+    fold = _partials_fold(
+        state_dir,
+        lambda b: b.select(
+            F.col(key_col).alias("key"), F.to_date(F.col(ts_col)).alias("day")
+        ).distinct(),
+        _distinct_reducer(["key", "day"]),
+        auto_compact_every,
     )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, fold)
 
 
 def read_rolling_distinct(spark, state_dir: str, window_days: int = 7):
@@ -1161,10 +1127,7 @@ def read_rolling_distinct(spark, state_dir: str, window_days: int = 7):
     accumulated (key, day) set — the same explode/dedup/count plan as
     the batch operator, over deduped state. Completes any interrupted
     compaction first."""
-    import pyspark.sql.functions as F
-
-    _recover_compaction(spark, state_dir)
-    kd = spark.read.parquet(state_dir).select("key", "day").distinct()
+    kd = _read_merged(spark, state_dir, _distinct_reducer(["key", "day"]))
     exploded = kd.select(
         "key",
         F.explode(
@@ -1198,12 +1161,12 @@ def run_stream_interarrival(
     one lag window + one aggregate reduce the batch to per-key partial
     stats; the batch's first event closes a BOUNDARY gap against the
     carry's ``last_us``. REQUIRES time-sliced batches in ascending
-    order (the SCD2/CUSUM stream contract) — CHECKED at runtime since
-    round 10: a batch holding a row older than its key's ``last_us``
-    raises instead of merging negative/aliased gaps silently.
-    State is one row per key regardless of stream length.
+    order (the SCD2/CUSUM stream contract) — CHECKED at runtime: a
+    batch holding a row older than its key's ``last_us`` raises
+    instead of merging negative/aliased gaps silently. State is one
+    row per key regardless of stream length.
 
-    Replay safety (round 9): the carry goes through the fenced-carry
+    Replay safety: the carry goes through the fenced-carry
     protocol (:func:`commit_carry`) — a ``foreachBatch`` retry of an
     already-committed batch id is a no-op instead of re-merging the
     batch's gaps into an already-advanced carry (double-count); a
@@ -1211,12 +1174,7 @@ def run_stream_interarrival(
     the committed carry.
     """
 
-    def fold(batch, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        if int(batch_id) <= carry_folded_through(spark, state_dir):
-            return  # fenced replay: carry already durable
+    def step(batch, batch_id: int, carry) -> None:
         us = F.unix_micros(F.col(ts_col))
         w = Window.partitionBy(*key_cols).orderBy(us)
         gap = us - F.lag(us).over(w)
@@ -1234,10 +1192,8 @@ def run_stream_interarrival(
                 F.max("__gap").alias("__mx"),
             )
         )
-        carry = read_current_carry(spark, state_dir)
-        if carry is None:  # first batch; a corrupt/legacy state dir
-            # raises inside read_current_carry, never reinitializes
-            carry = spark.createDataFrame(
+        if carry is None:  # first batch
+            carry = batch.sparkSession.createDataFrame(
                 [],
                 local.select(*key_cols)
                 .schema.add("last_us", "long")
@@ -1246,8 +1202,8 @@ def run_stream_interarrival(
                 .add("min_us", "long")
                 .add("max_us", "long"),
             )
-        # order precondition is CHECKED (round 10): the carry's
-        # last_us doubles as the per-key last-folded timestamp
+        # order precondition is CHECKED: the carry's last_us doubles
+        # as the per-key last-folded timestamp
         _assert_batches_in_order(
             batch,
             carry.select(*key_cols, F.col("last_us").alias("__cts")),
@@ -1284,14 +1240,7 @@ def run_stream_interarrival(
         )
         commit_carry(merged, state_dir, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, _carry_fold(state_dir, step))
 
 
 def read_interarrival_state(spark, state_dir: str) -> DataFrame:
@@ -1349,28 +1298,16 @@ def run_stream_additive_counts(
     read with :func:`read_summed_counts`.
     """
 
-    def fold(batch, batch_id: int) -> None:
+    def partials(batch):
         rows = prepare(batch) if prepare is not None else batch
-        write_batch_partials(
-            rows.groupBy(*group_cols).agg(
-                F.count(F.lit(1)).cast("long").alias("n")
-            ),
-            state_dir,
-            batch_id,
-        )
-        _maybe_auto_compact(
-            batch.sparkSession, state_dir, batch_id, auto_compact_every,
-            _counts_reducer(group_cols),
+        return rows.groupBy(*group_cols).agg(
+            F.count(F.lit(1)).cast("long").alias("n")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    fold = _partials_fold(
+        state_dir, partials, _counts_reducer(group_cols), auto_compact_every
     )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, fold)
 
 
 def read_summed_counts(spark, state_dir: str, group_cols: list[str]):
@@ -1378,12 +1315,7 @@ def read_summed_counts(spark, state_dir: str, group_cols: list[str]):
     per-group totals (exact: BIGINT addition in any order). An
     interrupted compaction is completed before reading, so the sum
     never sees a half-deleted layout."""
-    _recover_compaction(spark, state_dir)
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy(*group_cols)
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+    return _read_merged(spark, state_dir, _counts_reducer(group_cols))
 
 
 def run_stream_max_registers(
@@ -1408,35 +1340,20 @@ def run_stream_max_registers(
     table."""
     from salesforce_plugin_spark.functions.sketch import hll_registers
 
-    def fold(batch, batch_id: int) -> None:
-        write_batch_partials(
-            hll_registers(batch, group_cols, value_col), state_dir, batch_id
-        )
-        _maybe_auto_compact(
-            batch.sparkSession, state_dir, batch_id, auto_compact_every,
-            _max_registers_reducer(group_cols),
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    fold = _partials_fold(
+        state_dir,
+        lambda b: hll_registers(b, group_cols, value_col),
+        _max_registers_reducer(group_cols),
+        auto_compact_every,
     )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, fold)
 
 
 def read_max_registers(spark, state_dir: str, group_cols: list[str]):
     """Max-merge the accumulated per-batch partial registers to the
     final per-(group, bucket) registers (exact: MAX in any order).
     Completes any interrupted compaction first."""
-    _recover_compaction(spark, state_dir)
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("m_j").alias("m_j"))
-    )
+    return _read_merged(spark, state_dir, _max_registers_reducer(group_cols))
 
 
 def run_stream_additive_sums(
@@ -1465,33 +1382,24 @@ def run_stream_additive_sums(
     instead of being silently truncated by the long cast.
     Read with :func:`read_summed_sums`."""
 
-    def fold(batch, batch_id: int) -> None:
+    def partials(batch):
         rows = prepare(batch) if prepare is not None else batch
         _assert_integral_sum_cols(rows, sum_cols)
-        write_batch_partials(
-            rows.groupBy(*group_cols).agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                *[
-                    F.sum(F.col(c).cast("long")).cast("long").alias(f"sum_{c}")
-                    for c in sum_cols
-                ],
-            ),
-            state_dir,
-            batch_id,
-        )
-        _maybe_auto_compact(
-            batch.sparkSession, state_dir, batch_id, auto_compact_every,
-            _sums_reducer(group_cols, sum_cols),
+        return rows.groupBy(*group_cols).agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            *[
+                F.sum(F.col(c).cast("long")).cast("long").alias(f"sum_{c}")
+                for c in sum_cols
+            ],
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    fold = _partials_fold(
+        state_dir,
+        partials,
+        _sums_reducer(group_cols, sum_cols),
+        auto_compact_every,
     )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, fold)
 
 
 def read_summed_sums(
@@ -1500,18 +1408,7 @@ def read_summed_sums(
     """Merge the accumulated per-batch partials to final per-group
     ``(n, sum_c …)`` totals (exact BIGINT addition in any order).
     Completes any interrupted compaction first."""
-    _recover_compaction(spark, state_dir)
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            *[
-                F.sum(f"sum_{c}").cast("long").alias(f"sum_{c}")
-                for c in sum_cols
-            ],
-        )
-    )
+    return _read_merged(spark, state_dir, _sums_reducer(group_cols, sum_cols))
 
 
 def run_stream_distinct_set(
@@ -1531,42 +1428,28 @@ def run_stream_distinct_set(
     tuple: distinct-bearing read-outs (l-diversity counts, vocabulary
     sets, exact distinct keys) reduce from it exactly. ``prepare``
     maps the raw batch first, inside the fold. Each batch writes its
-    own ``__b=<id>`` partition (:func:`write_batch_partials`) — round 8
-    moved this fold off flat appends onto the same layout as the
-    additive family, so replays are idempotent at the STORAGE level
-    too (an overlapping replay no longer grows the state by duplicate
-    rows awaiting read-time dedup) and a long-lived stream compacts
+    own ``__b=<id>`` partition (:func:`write_batch_partials`), the same
+    layout as the additive family, so replays are idempotent at the
+    STORAGE level too (an overlapping replay does not grow the state by
+    duplicate rows awaiting read-time dedup) and a long-lived stream compacts
     with :func:`compact_distinct_set` instead of accumulating one file
     per batch forever. Read with :func:`read_distinct_set`.
     """
-    import pyspark.sql.functions as F  # noqa: F401  (parity with siblings)
-
-    def fold(batch, batch_id: int) -> None:
-        rows = prepare(batch) if prepare is not None else batch
-        write_batch_partials(
-            rows.select(*cols).distinct(), state_dir, batch_id
-        )
-        _maybe_auto_compact(
-            batch.sparkSession, state_dir, batch_id, auto_compact_every,
-            _distinct_reducer(cols),
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    merge = _distinct_reducer(cols)
+    fold = _partials_fold(
+        state_dir,
+        lambda b: merge(prepare(b) if prepare is not None else b),
+        merge,
+        auto_compact_every,
     )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, fold)
 
 
 def read_distinct_set(spark, state_dir: str, cols: list[str]):
     """The accumulated set: union of all batch partitions, deduped
     (idempotent merge — any replay collapses here). Completes any
     interrupted compaction first."""
-    _recover_compaction(spark, state_dir)
-    return spark.read.parquet(state_dir).select(*cols).distinct()
+    return _read_merged(spark, state_dir, _distinct_reducer(cols))
 
 
 def compact_distinct_set(

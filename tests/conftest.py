@@ -9,7 +9,6 @@ from salesforce_plugin_spark.session import get_spark
 def spark():
     s = get_spark(
         "tests",
-        master="local[8]",
         shuffle_partitions=4,
         # The compaction-protocol tests perform thousands of 1-row state
         # writes; per-write committer overhead (the _SUCCESS marker file

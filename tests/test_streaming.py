@@ -544,3 +544,72 @@ def test_upsert_corrupt_table_raises_and_keeps_files(spark, tmp_path):
         upsert_batch(str(tmp_path / "table"), batch, ["id"], "v", "day")
     assert bad.read_bytes() == b"not parquet"
     assert [p.name for p in part.iterdir()] == ["part-000.parquet"]
+
+
+def _one_file_stream(spark, tmp_path, rows, schema):
+    src = tmp_path / "src"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src))
+    return spark.readStream.schema(schema).parquet(str(src))
+
+
+@pytest.mark.parametrize("face", ["upsert", "scd2", "near_dedup"])
+def test_stream_corrupt_state_raises_and_keeps_files(spark, tmp_path, face):
+    """A non-parquet file in a face's existing state is a read failure,
+    not a first batch: the run raises and the file stays in place."""
+    import datetime as dt
+
+    from salesforce_plugin_spark.streaming import upsert as U
+
+    ckpt = str(tmp_path / "ckpt")
+    if face == "upsert":
+        bad_dir = tmp_path / "table" / "day=1"
+        stream = _one_file_stream(
+            spark, tmp_path, [(1, 1, "a")], "id long, day int, v string"
+        )
+        run = lambda: U.run_stream_upsert(  # noqa: E731
+            stream, str(tmp_path / "table"), ckpt, ["id"], "v", "day"
+        )
+    elif face == "scd2":
+        bad_dir = tmp_path / "table"
+        stream = _one_file_stream(
+            spark, tmp_path, [(1, "a", dt.datetime(2024, 1, 1))],
+            "k int, attr string, ts timestamp",
+        )
+        run = lambda: U.run_stream_scd2(  # noqa: E731
+            stream, str(tmp_path / "table"), ckpt, ["k"], ["attr"], "ts"
+        )
+    else:
+        bad_dir = tmp_path / "state" / "bands" / "__b=-1"
+        stream = _one_file_stream(
+            spark, tmp_path, [(1, "the quick brown fox jumps over")],
+            "doc_id long, text string",
+        )
+        run = lambda: U.run_stream_near_dedup(  # noqa: E731
+            stream, str(tmp_path / "state"), ckpt, "doc_id", "text"
+        )
+    bad_dir.mkdir(parents=True)
+    bad = bad_dir / "part-000.parquet"
+    bad.write_bytes(b"not parquet")
+    with pytest.raises(Exception):
+        run()
+    assert bad.read_bytes() == b"not parquet"
+    assert [p.name for p in bad_dir.iterdir()] == ["part-000.parquet"]
+
+
+def test_upsert_unresolvable_batch_schema_raises_and_keeps_rows(spark, tmp_path):
+    """Only the table read may mean "first batch": a batch whose columns
+    the merge cannot resolve against the table raises instead of
+    overwriting the touched partition with batch-only rows."""
+    from salesforce_plugin_spark.streaming.upsert import upsert_batch
+
+    table = str(tmp_path / "table")
+    upsert_batch(
+        table,
+        spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], "id long, day int, v string"),
+        ["id"], "v", "day",
+    )
+    batch = spark.createDataFrame([(1, 1, "c", 0)], "id long, day int, v string, extra int")
+    with pytest.raises(Exception, match="extra"):
+        upsert_batch(table, batch, ["id"], "v", "day")
+    got = {r.id: r.v for r in spark.read.parquet(table).collect()}
+    assert got == {1: "a", 2: "b"}
