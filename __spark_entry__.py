@@ -2,8 +2,8 @@
 
 ``entry(spark)`` is the flagship smoke query; ``queries()`` /
 ``oracle_sql()`` are the declared conformance surface (SURVEY.md §2),
-implemented in ``salesforce_plugin_spark/conformance.py`` and checked by
-the driver against DuckDB at sf=0.01 (row-count + schema +
+implemented in the ``salesforce_plugin_spark/conformance/`` package and
+checked by the driver against DuckDB at sf=0.01 (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 """
 

@@ -36,6 +36,7 @@ plans are what bench.py times at sf0.1.
 from __future__ import annotations
 
 from collections.abc import Callable
+from decimal import Decimal
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -678,6 +679,30 @@ _KMEANS_ASSIGN_SCALED_CTES = _KMEANS_ASSIGN_CTES.replace(
 
 
 
+def canon(v):
+    """Canonicalize a cell so Spark/DuckDB representations compare equal."""
+    if isinstance(v, Decimal):
+        return ("dec", str(v.normalize()))
+    if isinstance(v, float):
+        return ("f", repr(v))
+    if isinstance(v, (list, tuple)):
+        return tuple(canon(x) for x in v)
+    return v
+
+
+def rowset(cols, rows):
+    """Order-insensitive, column-name-sorted canonical form of a result."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted(
+        (tuple(canon(r[i]) for i in order) for r in rows), key=repr
+    )
+
+
+#: Most rows :func:`oracle_cross_check` materializes from either engine;
+#: a larger result raises instead of becoming an unbounded driver collect.
+CROSS_CHECK_ROW_CAP = 200_000
+
+
 def oracle_cross_check(
     df: DataFrame, name: str, sf_dir: str, max_rows: int = 20
 ) -> DataFrame:
@@ -697,9 +722,11 @@ def oracle_cross_check(
     whole class was eliminated separately by casting every oracle's
     final columns to BIGINT.)
 
-    Skipped when ``SPARK_GRAFT_BENCH=1`` (bench timings must time the
-    declared query, not an oracle replay — bench.py sets this) or when
-    duckdb is not importable. Returns ``df`` unchanged either way.
+    Each side is read up to ``CROSS_CHECK_ROW_CAP + 1`` rows; a side
+    over the cap raises naming the entry. Skipped when
+    ``SPARK_GRAFT_BENCH=1`` (bench timings must time the declared query,
+    not an oracle replay — bench.py sets this) or when duckdb is not
+    importable. Returns ``df`` unchanged either way.
     """
     import os
 
@@ -709,11 +736,10 @@ def oracle_cross_check(
         import duckdb
     except ImportError:  # pragma: no cover - duckdb ships in the env
         return df
-    from decimal import Decimal
-
     from salesforce_plugin_spark.conformance import ORACLES
     from salesforce_plugin_spark.sources.catalog import TABLES
 
+    cap = CROSS_CHECK_ROW_CAP
     con = duckdb.connect()
     try:
         for t in TABLES:
@@ -723,27 +749,18 @@ def oracle_cross_check(
             )
         cur = con.execute(ORACLES[name])
         o_cols = [d[0] for d in cur.description]
-        o_rows = cur.fetchall()
+        o_rows = cur.fetchmany(cap + 1)
     finally:
         con.close()
 
     s_cols = list(df.columns)
-    s_rows = [tuple(r) for r in df.collect()]
-
-    def canon(v):
-        if isinstance(v, Decimal):
-            return ("dec", str(v.normalize()))
-        if isinstance(v, float):
-            return ("f", repr(v))
-        if isinstance(v, (list, tuple)):
-            return tuple(canon(x) for x in v)
-        return v
-
-    def rowset(cols, rows):
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        return sorted(
-            (tuple(canon(r[i]) for i in order) for r in rows), key=repr
-        )
+    s_rows = [tuple(r) for r in df.limit(cap + 1).collect()]
+    for side, rows in (("spark", s_rows), ("oracle", o_rows)):
+        if len(rows) > cap:
+            raise RuntimeError(
+                f"{name}: oracle_cross_check reads at most {cap} rows per "
+                f"side; the {side} result has more"
+            )
 
     sset, oset = rowset(s_cols, s_rows), rowset(o_cols, o_rows)
     if sset != oset:

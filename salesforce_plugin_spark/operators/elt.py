@@ -21,7 +21,6 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from salesforce_plugin_spark.operators.schema_reconcile import (
@@ -30,12 +29,11 @@ from salesforce_plugin_spark.operators.schema_reconcile import (
     load_with_reconciliation,
 )
 from salesforce_plugin_spark.operators.transforms import (
-    add_fetch_time,
-    coerce_to_epoch_seconds,
     drop_attributes,
     flatten_relationship,
     truncate_varchar,
 )
+from salesforce_plugin_spark.sources.catalog import lowercase_columns
 
 # NOTE: sources.io imports operators.transforms, and importing any
 # operators submodule runs operators/__init__ which imports this module —
@@ -116,9 +114,7 @@ class ObjectExtract:
                 df = df.select(*[f.lower() for f in self.fields])
         if self.relationship_object:
             df = flatten_relationship(df, self.relationship_object)
-        df = drop_attributes(df)
-        df = df.toDF(*[c.lower() for c in df.columns])
-        return df
+        return lowercase_columns(drop_attributes(df))
 
     def execute(self, spark: SparkSession) -> None:
         from salesforce_plugin_spark.sources.io import (
@@ -165,7 +161,7 @@ class SchemaReconcileLoad:
         lengths = {
             d.name: n for d in descs if (n := d.effective_length()) is not None
         }
-        df = df.toDF(*[c.lower() for c in df.columns])
+        df = lowercase_columns(df)
         if lengths:
             df = truncate_varchar(
                 df, {c: n for c, n in lengths.items() if c in df.columns}

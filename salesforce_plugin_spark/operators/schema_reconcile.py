@@ -25,6 +25,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from salesforce_plugin_spark.sources.catalog import lowercase_columns
+
 # ---------------------------------------------------------------------------
 # B3: the dt_conv type contract (reference :41-55 → SURVEY §1.2 table)
 # ---------------------------------------------------------------------------
@@ -244,11 +246,6 @@ def reconcile_table(spark: SparkSession, table: str, descs: list[FieldDescriptor
 # ---------------------------------------------------------------------------
 # B7-B9: ordered alignment (the JSONPath replacement)
 # ---------------------------------------------------------------------------
-
-def lowercase_columns(df: DataFrame) -> DataFrame:
-    """B9 (reference :97,146)."""
-    return df.toDF(*[c.lower() for c in df.columns])
-
 
 def align_to_destination(df: DataFrame, dest_order: list[str]) -> DataFrame:
     """B7+B8: project the intersection of destination and source columns in

@@ -19,6 +19,7 @@ from salesforce_plugin_spark.operators.transforms import (
     coerce_to_epoch_seconds,
     drop_attributes,
 )
+from salesforce_plugin_spark.sources.catalog import lowercase_columns
 
 
 def _prepare(
@@ -29,8 +30,7 @@ def _prepare(
     """The contrib ``write_object_to_file`` pre-write pipeline (call site
     ``salesforce_to_s3_operator.py:208-212``): drop metadata, lowercase
     headers, optional epoch coercion (C3) and fetch-time column (C5)."""
-    df = drop_attributes(df)
-    df = df.toDF(*[c.lower() for c in df.columns])
+    df = lowercase_columns(drop_attributes(df))
     if coerce_to_timestamp:
         df = coerce_to_epoch_seconds(df)
     if record_time_added:

@@ -389,25 +389,56 @@ def _read_merged(spark, state_dir: str, reduce_fn) -> DataFrame:
 # BEFORE step 3, so a fenced replay can skip without losing them.
 
 
+def _scan_carry(spark, state_dir: str) -> tuple[int, str | None]:
+    """One listing of a carry state dir: (the fence, the first flat
+    top-level data file or None). The fence is the highest ``__c=<id>``
+    dir holding a ``_CARRY_COMMITTED`` marker (−1 = never)."""
+    fs, root, jvm = _fs(spark, state_dir)
+    if not fs.exists(root):
+        return -1, None
+    hp = jvm.org.apache.hadoop.fs.Path
+    flat = None
+    cids = []
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("__c="):
+            cids.append(int(name[len("__c="):]))
+        elif st.isFile() and flat is None and not name.startswith(("_", ".")):
+            flat = name
+    for cid in sorted(cids, reverse=True):
+        if fs.exists(hp(os.path.join(state_dir, f"__c={cid}", _CARRY_MARKER))):
+            return cid, flat
+    return -1, flat
+
+
+def _carry_fence(spark, state_dir: str) -> int:
+    """The fence from one listing; flat top-level files raise (see
+    :func:`read_current_carry`)."""
+    fence, flat = _scan_carry(spark, state_dir)
+    if flat is not None:
+        raise ValueError(
+            f"carry state_dir {state_dir!r} holds flat files "
+            f"(e.g. {flat!r}) from the pre-fence overwrite "
+            "layout (or is corrupt); the __c=<batch_id> layout "
+            "cannot coexist with them. Migrate once: read the "
+            "old carry, commit_carry(df, new_dir, last_batch_id) "
+            "into a fresh dir — see MIGRATION.md."
+        )
+    return fence
+
+
+def _read_carry(spark, state_dir: str, fence: int) -> DataFrame | None:
+    if fence < 0:
+        return None
+    return spark.read.parquet(os.path.join(state_dir, f"__c={fence}"))
+
+
 def carry_folded_through(spark, state_dir: str) -> int:
     """The durable fence: the highest batch id whose ``__c=<id>``
     version dir holds a ``_CARRY_COMMITTED`` marker (−1 = never).
     Marker-based, not pointer-based: commitment is the existence of
     an immutable file, so no crash can leave a half-written fence."""
-    fs, root, jvm = _fs(spark, state_dir)
-    if not fs.exists(root):
-        return -1
-    hp = jvm.org.apache.hadoop.fs.Path
-    best = -1
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("__c="):
-            cid = int(name[len("__c="):])
-            if cid > best and fs.exists(
-                hp(os.path.join(state_dir, name, _CARRY_MARKER))
-            ):
-                best = cid
-    return best
+    return _scan_carry(spark, state_dir)[0]
 
 
 def read_current_carry(spark, state_dir: str) -> DataFrame | None:
@@ -415,23 +446,7 @@ def read_current_carry(spark, state_dir: str) -> DataFrame | None:
     state dir holding flat top-level files — the pre-fence overwrite
     layout, or corruption — raises with the migration step instead of
     silently reinitializing (discarding state)."""
-    fs, root, _ = _fs(spark, state_dir)
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if st.isFile() and not name.startswith(("_", ".")):
-                raise ValueError(
-                    f"carry state_dir {state_dir!r} holds flat files "
-                    f"(e.g. {name!r}) from the pre-fence overwrite "
-                    "layout (or is corrupt); the __c=<batch_id> layout "
-                    "cannot coexist with them. Migrate once: read the "
-                    "old carry, commit_carry(df, new_dir, last_batch_id) "
-                    "into a fresh dir — see MIGRATION.md."
-                )
-    last = carry_folded_through(spark, state_dir)
-    if last < 0:
-        return None
-    return spark.read.parquet(os.path.join(state_dir, f"__c={last}"))
+    return _read_carry(spark, state_dir, _carry_fence(spark, state_dir))
 
 
 def commit_carry(carry: DataFrame, state_dir: str, batch_id: int) -> None:
@@ -464,15 +479,17 @@ def _carry_fold(state_dir: str, step):
     batch, skip a replay at or below the fence (its outputs and carry
     are already durable), otherwise call ``step(batch, batch_id,
     carry)`` with the last committed carry (None before the first
-    commit; a corrupt/legacy state dir raises, never reinitializes)."""
+    commit). The state dir is listed once per batch; a corrupt/legacy
+    state dir raises, replayed batches included, never reinitializes."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         if not batch.take(1):
             return
         spark = batch.sparkSession
-        if int(batch_id) <= carry_folded_through(spark, state_dir):
+        fence = _carry_fence(spark, state_dir)
+        if int(batch_id) <= fence:
             return
-        step(batch, batch_id, read_current_carry(spark, state_dir))
+        step(batch, batch_id, _read_carry(spark, state_dir, fence))
 
     return fold
 

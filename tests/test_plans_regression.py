@@ -530,3 +530,30 @@ def test_plans_md_covers_every_registry_entry():
     extra = sections - set(QUERIES)
     assert not missing, f"PLANS.md missing sections: {sorted(missing)}"
     assert not extra, f"PLANS.md stale sections: {sorted(extra)}"
+
+
+def test_registry_is_derived_from_the_family_modules():
+    """QUERIES and ORACLES cover the same names, the driver window leads
+    the registry in its declared order, and every entry's key is the
+    name of a ``q_*`` builder defined in a conformance family module."""
+    from salesforce_plugin_spark.conformance import (
+        _FAMILIES,
+        _R12_WINDOW,
+        ORACLES,
+    )
+
+    assert set(QUERIES) == set(ORACLES)
+    assert list(QUERIES)[:50] == _R12_WINDOW
+    families = {m.__name__ for m in _FAMILIES}
+    for name, fn in QUERIES.items():
+        assert fn.__wrapped__.__name__ == name, name
+        assert fn.__wrapped__.__module__ in families, name
+
+
+def test_registry_merge_rejects_a_name_in_two_families():
+    from salesforce_plugin_spark.conformance import _merge_unique, relational
+
+    merged = {"q_a": 1}
+    with pytest.raises(ValueError, match="q_a"):
+        _merge_unique(merged, {"q_a": 2, "q_b": 3}, relational, "queries")
+    assert merged == {"q_a": 1}

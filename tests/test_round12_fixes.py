@@ -149,6 +149,21 @@ def test_oracle_cross_check_raises_with_row_evidence(spark, monkeypatch):
     assert "spark-only sample" in msg and "oracle-only sample" in msg
 
 
+def test_oracle_cross_check_raises_over_row_cap(spark, monkeypatch):
+    """The probe reads at most CROSS_CHECK_ROW_CAP + 1 rows per side; a
+    result over the cap raises naming the entry instead of collecting
+    it (q_key_skew has 10 rows)."""
+    from salesforce_plugin_spark.conformance import _common
+    from salesforce_plugin_spark.operators.analytics import key_skew
+    from salesforce_plugin_spark.sources.catalog import load_table
+
+    monkeypatch.setattr(_common, "CROSS_CHECK_ROW_CAP", 3)
+    e = load_table(spark, SF_DIR, "events")
+    out = key_skew(e, "user_id", top_n=10)
+    with pytest.raises(RuntimeError, match="q_key_skew.*at most 3 rows"):
+        oracle_cross_check(out, "q_key_skew", SF_DIR)
+
+
 def test_oracle_cross_check_noop_under_bench_flag(spark, monkeypatch):
     """Under SPARK_GRAFT_BENCH=1 the probe must not even read the
     oracle — a deliberately broken oracle must not raise."""

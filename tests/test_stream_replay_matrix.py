@@ -378,6 +378,48 @@ def test_stale_uncommitted_carry_is_invisible(spark, tmp_path, face):
     assert got, face  # the committed (non-empty) carry, not the stale one
 
 
+def test_carry_fold_lists_state_dir_once_per_batch(
+    spark, tmp_path, monkeypatch
+):
+    """A fenced-carry fold lists its state dir once per micro-batch
+    before committing: the fence, the flat-file check and the carry
+    read share one listing."""
+    lists = []
+    at_commit = []
+
+    class CountingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def listStatus(self, path):
+            if path.getName() == "carry":  # not the alarms' out dir
+                lists.append(path)
+            return self._fs.listStatus(path)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real_fs, real_commit = U._fs, U.commit_carry
+
+    def counting_fs(spark, path_str):
+        fs, p, jvm = real_fs(spark, path_str)
+        return CountingFs(fs), p, jvm
+
+    def counting_commit(carry, state_dir, batch_id):
+        at_commit.append(len(lists))
+        real_commit(carry, state_dir, batch_id)
+        lists.clear()  # the commit's own GC listing is not the fold's
+
+    monkeypatch.setattr(U, "_fs", counting_fs)
+    monkeypatch.setattr(U, "commit_carry", counting_commit)
+    src = _sliced_source(spark, tmp_path, n_slices=2)
+    FACES["cusum"]["run"](
+        spark, src, str(tmp_path / "state"), str(tmp_path / "ck")
+    )
+    # batch 0 finds no state dir; batch 1 lists the committed one once
+    assert at_commit == [0, 1]
+
+
 def test_conformance_faces_all_mapped():
     """Every q_stream_* conformance face must declare its replay
     mechanism here — engine fold (rows of FACES) or Spark's own
