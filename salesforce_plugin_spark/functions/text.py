@@ -364,8 +364,10 @@ def bigram_fluency(
 
 def scrub_newlines(text: Column | str) -> Column:
     """C4: strip CR/LF so CSV rows stay single-line (contrib
-    ``write_object_to_file``; call site salesforce_to_s3_operator.py:84-90,210)."""
-    return F.regexp_replace(text, r"[\r\n]+", "")
+    ``write_object_to_file``; call site salesforce_to_s3_operator.py:84-90,210).
+    ``translate`` deletes exactly the characters ``regexp_replace(text,
+    "[\\r\\n]+", "")`` does, without a regex match per cell."""
+    return F.translate(text, "\r\n", "")
 
 
 def chunk_starts(toks: Column, stride: int) -> Column:

@@ -92,7 +92,8 @@ def decode_epoch_millis(col: Column | str) -> Column:
 
 def add_fetch_time(df: DataFrame, col_name: str = "time_fetched_from_salesforce") -> DataFrame:
     """C5: ``record_time_added=True`` — extraction-timestamp column (contrib;
-    call site ``salesforce_to_s3_operator.py:103-107,129,212``)."""
+    call site ``salesforce_to_s3_operator.py:103-107,129,212``). The folded
+    timestamp literal is inlined into generated code, so each call compiles."""
     return df.withColumn(col_name, F.current_timestamp())
 
 

@@ -14,12 +14,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from salesforce_plugin_spark.functions.text import scrub_newlines
+# not add_fetch_time: its inlined timestamp literal compiles anew per call
 from salesforce_plugin_spark.operators.transforms import (
-    add_fetch_time,
     coerce_to_epoch_seconds,
     drop_attributes,
 )
 from salesforce_plugin_spark.sources.catalog import lowercase_columns
+
+#: The csv / json writers' default ``timestampFormat``; the fetch time is
+#: written as this text, so the bytes match a TimestampType column's.
+WRITER_TIMESTAMP_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"
 
 
 def _prepare(
@@ -29,12 +33,22 @@ def _prepare(
 ) -> DataFrame:
     """The contrib ``write_object_to_file`` pre-write pipeline (call site
     ``salesforce_to_s3_operator.py:208-212``): drop metadata, lowercase
-    headers, optional epoch coercion (C3) and fetch-time column (C5)."""
+    headers, optional epoch coercion (C3) and fetch-time column (C5).
+
+    The C5 column is the fetch time already rendered as the writers'
+    timestamp text (:data:`WRITER_TIMESTAMP_FORMAT`), so the sinks write the
+    same bytes as for a TimestampType column. The optimizer folds it to a
+    string literal, which generated code reads from its references array;
+    a folded timestamp is inlined as a ``long`` constant instead, so each
+    call would compile new classes that no later call can reuse."""
     df = lowercase_columns(drop_attributes(df))
     if coerce_to_timestamp:
         df = coerce_to_epoch_seconds(df)
     if record_time_added:
-        df = add_fetch_time(df)
+        df = df.withColumn(
+            "time_fetched_from_salesforce",
+            F.date_format(F.current_timestamp(), WRITER_TIMESTAMP_FORMAT),
+        )
     return df
 
 

@@ -3,11 +3,14 @@ F4 multimodal plumbing (payload stats, stubbed decoders)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
 import json
 import os
+import re
 import tempfile
 
+import pyspark.sql.functions as F
 import pytest
 
 from salesforce_plugin_spark.functions.multimodal import (
@@ -16,7 +19,9 @@ from salesforce_plugin_spark.functions.multimodal import (
     frame_sample_plan,
     payload_stats,
 )
+from salesforce_plugin_spark.operators.elt import BulkQueryExtract, ObjectExtract
 from salesforce_plugin_spark.sources.io import (
+    WRITER_TIMESTAMP_FORMAT,
     write_csv,
     write_json_array,
     write_ndjson,
@@ -68,6 +73,91 @@ def test_write_csv_overwrite_idempotent(spark, tmp_path):
     write_csv(sample_df(spark), out)
     write_csv(sample_df(spark), out)     # E5: replace=True analog
     assert read_text(out).splitlines()[0] == "id,txt"
+
+
+# --- C5 fetch time -----------------------------------------------------------
+
+FETCH_TIME_RE = re.compile(r"^\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d\.\d{3}Z$")
+
+#: microseconds, a whole second, the last microsecond, 1 ms
+FIXED_TIMES = [
+    dt.datetime(2021, 3, 4, 5, 6, 7, 123456),
+    dt.datetime(2021, 3, 4, 5, 6, 7),
+    dt.datetime(2021, 3, 4, 5, 6, 7, 999999),
+    dt.datetime(2021, 3, 4, 5, 6, 7, 1000),
+]
+
+
+def sink_cells(fmt, path, col):
+    """The ``col`` cells a csv / ndjson / json sink wrote, as text."""
+    text = read_text(path)
+    if fmt == "csv":  # every part file starts with the header
+        header, *lines = text.splitlines()
+        i = header.split(",").index(col)
+        return [line.split(",")[i] for line in lines if line != header]
+    if fmt == "ndjson":
+        return [json.loads(line)[col] for line in text.splitlines()]
+    return [rec[col] for rec in json.loads(text)]
+
+
+def test_writer_timestamp_format_is_the_sinks_timestamp_text(spark, tmp_path):
+    """The fetch time's ``date_format`` text equals what each sink writes for
+    a TimestampType value, so a Spark upgrade that changes the writers'
+    default shows here."""
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(FIXED_TIMES)], "k long, t timestamp"
+    ).coalesce(1)
+    want = [r.s for r in df.select(F.date_format("t", WRITER_TIMESTAMP_FORMAT).alias("s")).collect()]
+    assert len(set(want)) == len(FIXED_TIMES)
+    for fmt, writer in (("csv", write_csv), ("ndjson", write_ndjson), ("json", write_json_array)):
+        out = str(tmp_path / fmt)
+        writer(df, out)
+        assert sink_cells(fmt, out, "t") == want, fmt
+
+
+@pytest.fixture(scope="module")
+def repeated_extracts(spark, tmp_path_factory):
+    """Each extract run twice into fresh destinations; returns, per extract,
+    the Janino compile count of the second call and its output dir."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    acct = spark.createDataFrame(
+        [(i, f"n{i}\r\nx", FIXED_TIMES[i % 4]) for i in range(20)],
+        "Id long, Name string, Created timestamp",
+    )
+    resolve = lambda name: acct  # noqa: E731
+    base = tmp_path_factory.mktemp("repeat")
+    runs = {}
+    for label in ("csv", "ndjson", "json", "bulk"):
+        compiles = []
+        for k in range(2):
+            dest = str(base / f"{label}{k}")
+            if label == "bulk":
+                op = BulkQueryExtract("SELECT Id, Name FROM Account", dest, resolve=resolve)
+            else:
+                op = ObjectExtract(
+                    "Account", dest, fmt=label, coerce_to_timestamp=True,
+                    record_time_added=True, resolve=resolve,
+                )
+            before = codegen.METRIC_COMPILATION_TIME().getCount()
+            op.execute(spark)
+            compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+        runs[label] = (compiles[1], dest)
+    return runs
+
+
+def test_repeated_extract_compiles_nothing(repeated_extracts):
+    """A second identical extract reuses every generated class: nothing
+    call-specific (such as the fetch time) is inlined into the code."""
+    assert {k: n for k, (n, _) in repeated_extracts.items()} == {
+        "csv": 0, "ndjson": 0, "json": 0, "bulk": 0,
+    }
+
+
+@pytest.mark.parametrize("fmt", ["csv", "ndjson", "json"])
+def test_extract_writes_fetch_time_as_writer_text(repeated_extracts, fmt):
+    cells = sink_cells(fmt, repeated_extracts[fmt][1], "time_fetched_from_salesforce")
+    assert len(cells) == 20
+    assert all(FETCH_TIME_RE.match(c) for c in cells), cells[:3]
 
 
 # --- F4 multimodal ----------------------------------------------------------

@@ -958,3 +958,31 @@ def test_changepoint_gain_nonnegative_and_argmax_matches(spark, counts):
             best, best_t = gm, t
     assert r.n_left == best_t
     assert r.gain_milli == best
+
+
+#: CR, LF and CRLF among tabs, spaces, other line breaks the scrub keeps,
+#: ASCII, non-ASCII and astral text.
+scrub_piece_st = st.one_of(
+    st.sampled_from(["\r", "\n", "\r\n", "\n\r", "\t", " ", "\x0b", "\x85", "\u2028",
+                     "a", "é", "日", "\U0001d11e", "\U0001f600"]),
+    st.text(st.characters(blacklist_categories=("Cs",)), max_size=4),
+)
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(cells=st.lists(
+    st.one_of(st.none(), st.lists(scrub_piece_st, max_size=8).map("".join)),
+    min_size=1, max_size=20,
+))
+def test_scrub_newlines_matches_the_regex_scrub(spark, cells):
+    """C4: the ``translate`` scrub deletes exactly what the regex scrub it
+    replaced deletes, NULL included."""
+    from salesforce_plugin_spark.functions.text import scrub_newlines
+
+    df = spark.createDataFrame([(c,) for c in cells], "s string")
+    rows = df.select(
+        scrub_newlines(F.col("s")).alias("got"),
+        F.regexp_replace(F.col("s"), r"[\r\n]+", "").alias("want"),
+    ).collect()
+    assert [r.got for r in rows] == [r.want for r in rows]
