@@ -10,16 +10,19 @@ machinery (describe → create/alter → aligned load) runs against the Spark ca
 and the serialization transforms (epoch coercion, newline scrub, truncation,
 relationship flattening) are column expressions.
 
-Layout:
+Layout (import each name from the module that defines it, e.g.
+``salesforce_plugin_spark.operators.elt.ObjectExtract``):
     session        SparkSession factory + runtime conf (UTC, AQE, parquet quirks)
-    sources/       catalog (named parquet tables), io (csv/json/ndjson writers)
-    operators/     relational (SOQL surface), transforms (C1-C8),
-                   schema_reconcile (B1-B9: dt_conv, DDL generation, drift)
+    sources/       catalog (named parquet tables), io (csv/json/ndjson writers),
+                   jdbc (JDBC DDL, scan and bulk load), salesforce_auth
+    operators/     elt (the reference's three operators), transforms (C1-C8),
+                   schema_reconcile (B1-B9: dt_conv, DDL generation, drift),
+                   analytics, joins, merge, scd, timeseries, validate, ...
     functions/     vector math, text analysis, dedup (exact/minhash/simhash/
-                   jaccard/embedding), similarity search
-    streaming/     windowed/watermarked/sessionized event processing
+                   jaccard/embedding), graph, sketches, similarity search
+    streaming/     windowed/watermarked/sessionized event processing, upsert sinks
     plans/         SOQL front door (string query → DataFrame plan)
-    conformance    the declared query registry checked against the DuckDB oracle
+    conformance/   the declared query registry checked against the DuckDB oracle
 """
 
 from salesforce_plugin_spark.session import (

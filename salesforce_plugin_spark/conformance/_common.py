@@ -1,37 +1,5 @@
-"""Declared conformance queries — the contract checked against the DuckDB
-oracle (SURVEY.md §2 "Declared conformance queries" table).
-
-Every capability row in SURVEY §2 (the SOQL surface D1-D21 the reference
-forwards to Salesforce's executor, the plugin's own transforms C1-C8 /
-B1-B9, and the north-star training-data operators F1-F6) has a query here;
-``QUERIES`` maps name → builder(spark, sf_dir) → DataFrame and ``ORACLES``
-maps the same name → ANSI SQL DuckDB runs on the same parquet. Names absent
-from ``ORACLES`` degrade to the driver's rows-only check (nondeterministic
-or non-SQL-expressible ops only).
-
-Determinism discipline (what makes value-hashes match across two engines):
-
-- **Sums over doubles** are cast per-row to DECIMAL first, then summed —
-  decimal addition is exact and associative, so partial/final aggregation
-  order (Spark) vs sequential scan (DuckDB) cannot diverge. A raw double
-  SUM is order-dependent in the last ulp and WILL mismatch.
-- **Averages** are computed as ``CAST(decimal_sum AS DOUBLE) / count`` —
-  one double divide of identical operands is bit-deterministic.
-- **Timestamps** leave the plan as epoch integers (``unix_millis`` /
-  ``unix_micros`` ↔ ``epoch_ms`` / ``epoch_us``) or formatted strings,
-  never raw timestamp objects, sidestepping ns/µs/ms precision and
-  tz-naivety differences between engines. The fixtures' physical unit is
-  NOT assumed anywhere — the catalog and streaming source sniff the
-  parquet footer (currently ``timestamp[us]``; see FIXTURES.md "Harness
-  notes" and tests/test_fixture_precision.py).
-- **Every computed column is aliased identically** in the Spark plan and
-  the oracle SQL — the driver sorts columns by name before hashing.
-
-Scale posture: each builder is a lazy DataFrame plan (no collect), filters
-sit directly on scans so they push into parquet, dimension-side joins are
-broadcast, and aggregate plans keep partial aggregation map-side. The same
-plans are what bench.py times at sf0.1.
-"""
+"""What the conformance family modules share: their imports, date cutoffs, decimal helpers and
+oracle-SQL generators, the row comparator ``canon`` / ``rowset`` and ``oracle_cross_check``."""
 
 from __future__ import annotations
 

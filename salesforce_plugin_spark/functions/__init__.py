@@ -1,159 +1,1 @@
-from salesforce_plugin_spark.functions.dedup import (
-    containment_pairs,
-    dedup_exact,
-    novelty_scores,
-    component_size_histogram,
-    global_line_dedup,
-    semantic_dedup,
-    span_dedup,
-    embedding_cosine_pairs,
-    hamming64,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    near_dedup_apply,
-    near_dedup_clusters,
-    ngram_jaccard_pairs,
-    portable_hash32,
-    simhash64,
-    simhash_table,
-    winnow_fingerprints,
-    word_shingles,
-)
-from salesforce_plugin_spark.functions.encoding import corrupt_encoding, fix_encoding
-from salesforce_plugin_spark.functions.dedup import dup_size_histogram
-from salesforce_plugin_spark.functions.graph import (
-    degree_assortativity,
-    degree_distribution,
-    hits_fixed,
-    khop_reachability,
-    kcore_fixed,
-    modularity,
-    pagerank_fixed,
-    triangle_counts,
-)
-from salesforce_plugin_spark.functions.entity import (
-    blocked_fuzzy_link,
-    golden_records,
-    deletion_link,
-    deletion_neighborhood,
-)
-from salesforce_plugin_spark.functions.ir import bm25_scores, ranked, rrf_fuse
-from salesforce_plugin_spark.functions.sketch import (
-    binned_quantiles,
-    bloom_build,
-    bloom_positions,
-    bloom_prune,
-    histogram_counts,
-    histogram_tvd,
-    iqr_outliers,
-    winsorize,
-    percentile_normalize,
-    quantiles_from_counts,
-    rolling_quantiles,
-    rolling_quantiles_from_daily,
-    cm_estimate,
-    cm_sketch,
-    kmv_distinct,
-    kmv_join_size,
-    kmv_set_ops,
-    quantile_bins,
-)
-from salesforce_plugin_spark.functions.web import url_dedup, url_normalize
-from salesforce_plugin_spark.functions.text import (
-    bpe_apply,
-    bpe_pair_counts,
-    collocation_lift,
-    oov_rate,
-    bpe_token_count,
-    distinct_token_count,
-    fingerprint,
-    hashed_ngram_importance,
-    hash_bucket,
-    gopher_quality,
-    lang_id,
-    quality_metrics,
-    source_vocab_overlap,
-    token_gini,
-    vocab_coverage,
-    rake_keywords,
-    rake_phrases,
-    scrub_newlines,
-    split_assign,
-    token_count,
-    tokens,
-)
-from salesforce_plugin_spark.functions.vector import (
-    ann_recall,
-    mutual_nn,
-    centroid_similarity,
-    random_projection,
-    projection_signs,
-    cosine,
-    dimension_stats,
-    gram_power_iterations,
-    gram_power_step,
-    cosine_topk,
-    dot,
-    ivf_index,
-    ivf_topk,
-    sign_bucket,
-)
-
-__all__ = [
-    "dedup_exact",
-    "global_line_dedup",
-    "semantic_dedup",
-    "span_dedup",
-    "hashed_ngram_importance",
-    "bm25_scores",
-    "ranked",
-    "rrf_fuse",
-    "blocked_fuzzy_link",
-    "deletion_link",
-    "deletion_neighborhood",
-    "cm_sketch",
-    "cm_estimate",
-    "bpe_pair_counts",
-    "kmv_distinct",
-    "kmv_set_ops",
-    "kmv_join_size",
-    "quantile_bins",
-    "binned_quantiles",
-    "url_normalize",
-    "url_dedup",
-    "pagerank_fixed",
-    "triangle_counts",
-    "gram_power_step",
-    "gram_power_iterations",
-    "fix_encoding",
-    "corrupt_encoding",
-    "word_shingles",
-    "minhash_signatures",
-    "lsh_candidate_pairs",
-    "near_dedup_clusters",
-    "near_dedup_apply",
-    "winnow_fingerprints",
-    "portable_hash32",
-    "simhash64",
-    "simhash_table",
-    "hamming64",
-    "ngram_jaccard_pairs",
-    "embedding_cosine_pairs",
-    "tokens",
-    "token_count",
-    "distinct_token_count",
-    "bpe_token_count",
-    "lang_id",
-    "quality_metrics",
-    "gopher_quality",
-    "fingerprint",
-    "hash_bucket",
-    "split_assign",
-    "scrub_newlines",
-    "dot",
-    "cosine",
-    "cosine_topk",
-    "sign_bucket",
-    "ivf_index",
-    "ivf_topk",
-]
+"""Column and DataFrame functions; each name is imported from its module, e.g. ``functions.text``."""

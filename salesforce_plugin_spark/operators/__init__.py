@@ -1,156 +1,1 @@
-from salesforce_plugin_spark.operators.analytics import (
-    activity_bitmap,
-    class_balance,
-    cohort_retention,
-    contribution_analysis,
-    decayed_score,
-    fano_factor,
-    fano_from_daily,
-    group_trend,
-    leadlag_correlation,
-    linear_attribution,
-    mad_outliers,
-    rank_movers,
-    key_skew,
-    copurchase_pairs,
-    funnel,
-    funnel_latency,
-    poisson_bootstrap,
-    rank_correlation,
-    rolling_distinct,
-    session_trajectories,
-    weighted_median,
-    minmax_scale,
-    session_transitions,
-    target_encoding,
-    transition_probabilities,
-    user_growth,
-    zscore_outliers,
-)
-from salesforce_plugin_spark.operators.elt import (
-    BulkQueryExtract,
-    ObjectExtract,
-    SchemaReconcileLoad,
-)
-from salesforce_plugin_spark.operators.joins import (
-    asof_join,
-    interval_overlap_join,
-    range_join_bucketed,
-)
-from salesforce_plugin_spark.operators.merge import (
-    apply_changes,
-    content_manifest,
-    fold_additive_rollup,
-    snapshot_diff,
-    surrogate_keys,
-)
-from salesforce_plugin_spark.operators.timeseries import (
-    interarrival_stats,
-    dow_profile,
-    dow_profile_from_counts,
-    seasonal_anomaly_days,
-    coverage_gaps,
-    cusum_alarms,
-    date_dimension,
-    debounce,
-    disorder_stats,
-    throttle_per_window,
-    resample_daily_ffill,
-    rolling_daily_metrics,
-)
-from salesforce_plugin_spark.operators.partitioning import (
-    explain_skew,
-    write_zordered,
-    zorder_key,
-    repartition_by_time,
-    salted_join,
-    write_bucketed,
-)
-from salesforce_plugin_spark.operators.schema_reconcile import (
-    FieldDescriptor,
-    from_describe,
-    jsonpaths_document,
-    load_with_reconciliation,
-    reconcile_table,
-    redshift_copy_command,
-    to_describe,
-)
-from salesforce_plugin_spark.operators.scd import scd2_apply_changes, scd2_intervals
-from salesforce_plugin_spark.operators.transforms import (
-    union_evolve,
-    add_fetch_time,
-    coerce_to_epoch_seconds,
-    decode_epoch_millis,
-    drop_attributes,
-    flatten_relationship,
-    nest_children,
-    scrub_newlines,
-    truncate_varchar,
-)
-
-__all__ = [
-    "funnel",
-    "funnel_latency",
-    "mad_outliers",
-    "rank_movers",
-    "leadlag_correlation",
-    "group_trend",
-    "rank_correlation",
-    "poisson_bootstrap",
-    "weighted_median",
-    "rolling_distinct",
-    "decayed_score",
-    "fano_factor",
-    "fano_from_daily",
-    "dow_profile",
-    "dow_profile_from_counts",
-    "coverage_gaps",
-    "seasonal_anomaly_days",
-    "session_trajectories",
-    "cusum_alarms",
-    "content_manifest",
-    "key_skew",
-    "class_balance",
-    "snapshot_diff",
-    "surrogate_keys",
-    "fold_additive_rollup",
-    "cohort_retention",
-    "copurchase_pairs",
-    "minmax_scale",
-    "interarrival_stats",
-    "session_transitions",
-    "target_encoding",
-    "transition_probabilities",
-    "user_growth",
-    "zscore_outliers",
-    "asof_join",
-    "range_join_bucketed",
-    "interval_overlap_join",
-    "apply_changes",
-    "scd2_apply_changes",
-    "scd2_intervals",
-    "BulkQueryExtract",
-    "ObjectExtract",
-    "SchemaReconcileLoad",
-    "explain_skew",
-    "repartition_by_time",
-    "salted_join",
-    "write_bucketed",
-    "zorder_key",
-    "write_zordered",
-    "FieldDescriptor",
-    "from_describe",
-    "to_describe",
-    "reconcile_table",
-    "jsonpaths_document",
-    "redshift_copy_command",
-    "load_with_reconciliation",
-    "flatten_relationship",
-    "nest_children",
-    "drop_attributes",
-    "coerce_to_epoch_seconds",
-    "decode_epoch_millis",
-    "scrub_newlines",
-    "add_fetch_time",
-    "truncate_varchar",
-]
+"""DataFrame operators; each name is imported from its module, e.g. ``operators.elt``."""

@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from salesforce_plugin_spark import plans
 from salesforce_plugin_spark.operators.schema_reconcile import (
     FieldDescriptor,
     from_describe,
@@ -33,12 +34,12 @@ from salesforce_plugin_spark.operators.transforms import (
     flatten_relationship,
     truncate_varchar,
 )
+from salesforce_plugin_spark.plans.soql import assert_bulk_compatible
+from salesforce_plugin_spark.sources import io as sinks
 from salesforce_plugin_spark.sources.catalog import lowercase_columns
 
-# NOTE: sources.io imports operators.transforms, and importing any
-# operators submodule runs operators/__init__ which imports this module —
-# so io sinks are imported lazily inside execute() to keep the package
-# import-order independent.
+# ``plans.soql_to_df`` and ``sinks.write_*`` are looked up at call time, so
+# a wrapper installed on those modules (a tracer) sees the facades' calls.
 
 Resolver = Callable[[str], DataFrame]
 
@@ -65,16 +66,12 @@ class BulkQueryExtract:
     resolve: Resolver | None = None
 
     def execute(self, spark: SparkSession) -> None:
-        from salesforce_plugin_spark.plans import soql_to_df
-        from salesforce_plugin_spark.plans.soql import assert_bulk_compatible
-        from salesforce_plugin_spark.sources.io import write_ndjson
-
         # Bulk-API fidelity: aggregates / GROUP BY / OFFSET are REST-only
         # (reference Bulk semantics, salesforce_to_s3_operator.py:50) —
         # rejected here with a typed error instead of server-side.
         assert_bulk_compatible(self.soql)
-        df = soql_to_df(spark, self.soql, resolve=self.resolve or _default_resolver(spark))
-        write_ndjson(df, self.dest)
+        df = plans.soql_to_df(spark, self.soql, resolve=self.resolve or _default_resolver(spark))
+        sinks.write_ndjson(df, self.dest)
 
 
 @dataclass
@@ -105,9 +102,7 @@ class ObjectExtract:
         """The lazy plan for stages 3-7 of the reference lifecycle."""
         resolve = self.resolve or _default_resolver(spark)
         if self.query:
-            from salesforce_plugin_spark.plans import soql_to_df
-
-            df = soql_to_df(spark, self.query, resolve=resolve)
+            df = plans.soql_to_df(spark, self.query, resolve=resolve)
         else:
             df = resolve(self.object_name)
             if self.fields:
@@ -117,17 +112,11 @@ class ObjectExtract:
         return lowercase_columns(drop_attributes(df))
 
     def execute(self, spark: SparkSession) -> None:
-        from salesforce_plugin_spark.sources.io import (
-            write_csv,
-            write_json_array,
-            write_ndjson,
-        )
-
         df = self.build(spark)
         writer = {
-            "csv": write_csv,
-            "ndjson": write_ndjson,
-            "json": write_json_array,
+            "csv": sinks.write_csv,
+            "ndjson": sinks.write_ndjson,
+            "json": sinks.write_json_array,
         }.get(self.fmt)
         if writer is None:
             raise ValueError(f"fmt must be csv|json|ndjson, got {self.fmt!r}")

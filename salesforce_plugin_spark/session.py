@@ -15,9 +15,12 @@ it is given without rebuilding it.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 #: SQL confs required for correct + deterministic semantics on the fixture data.
 #: All of these are runtime-settable.
@@ -64,8 +67,8 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     for key, value in RUNTIME_CONF.items():
         try:
             spark.conf.set(key, value)
-        except Exception:  # pragma: no cover - a static conf on some build
-            pass
+        except Exception as exc:  # pragma: no cover - a static conf on some build
+            _log.debug("runtime conf %s=%s not set: %r", key, value, exc)
     _conf_applied.add(spark)
     return spark
 
@@ -110,17 +113,16 @@ def configure_s3(
         "fs.s3a.connection.maximum": "96",
     }.items():
         hconf.set(key, value)
-    try:
-        spark.conf.set(
-            "spark.sql.sources.commitProtocolClass",
-            "org.apache.spark.internal.io.cloud.PathOutputCommitProtocol",
-        )
-        spark.conf.set(
-            "spark.sql.parquet.output.committer.class",
-            "org.apache.spark.internal.io.cloud.BindingParquetOutputCommitter",
-        )
-    except Exception:  # pragma: no cover — older builds: keep default committer
-        pass
+    cloud = "org.apache.spark.internal.io.cloud"
+    for key, value in {
+        "spark.sql.sources.commitProtocolClass": f"{cloud}.PathOutputCommitProtocol",
+        "spark.sql.parquet.output.committer.class": f"{cloud}.BindingParquetOutputCommitter",
+    }.items():
+        try:
+            spark.conf.set(key, value)
+        except Exception as exc:  # pragma: no cover — older builds: keep default committer
+            _log.debug("cloud committer conf %s not set: %r", key, exc)
+            break
     return spark
 
 

@@ -1,3 +1,1 @@
-from salesforce_plugin_spark.sources.catalog import TABLES, load_table, register_views
-
-__all__ = ["TABLES", "load_table", "register_views"]
+"""Catalog, extract sinks and JDBC; each name is imported from its module, e.g. ``sources.io``."""

@@ -16,6 +16,7 @@ long→timestamp_micros conversion forced by ``spark.sql.legacy.parquet.nanosAsL
 
 from __future__ import annotations
 
+import logging
 import os
 from functools import lru_cache
 
@@ -23,6 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from salesforce_plugin_spark.session import ensure_runtime_conf
+
+_log = logging.getLogger(__name__)
 
 #: The fixture universe (TESTDATA.md). Mirrors the reference's notion of the
 #: set of extractable Salesforce objects.
@@ -75,7 +78,8 @@ def _footer_schema_at(path: str, mtime_ns: int):
         import pyarrow.dataset as ds
 
         return ds.dataset(path, format="parquet").schema
-    except Exception:
+    except Exception as exc:
+        _log.debug("footer schema of %s not inspectable: %r", path, exc)
         return None
 
 
@@ -194,7 +198,8 @@ def int64_epoch_unit(path: str, col: str) -> str | None:
                 if st is not None and st.has_min_max and st.max is not None:
                     return epoch_unit_of(st.max)
         return None
-    except Exception:
+    except Exception as exc:
+        _log.debug("int64 epoch unit of %s in %s not inspectable: %r", col, path, exc)
         return None
 
 
@@ -206,24 +211,25 @@ def lowercase_columns(df: DataFrame) -> DataFrame:
     return df.toDF(*lowered)
 
 
-#: analyzed base-scan plans keyed on (session, path, mtime) — a DataFrame
-#: is an immutable logical plan, so reusing one across queries is safe,
-#: and re-resolving a parquet source costs a file listing + footer schema
-#: read per call (0.03-0.08s × tables × queries — the dominant
-#: plan-construction cost in multi-table workloads). The mtime key gives
-#: the same regenerated-fixture freshness contract as footer_schema.
-_scan_cache: dict[tuple[int, str, int], DataFrame] = {}
+#: analyzed base-scan plans with their TIMESTAMP(NANOS) column names,
+#: keyed on (session, path, mtime) — a DataFrame is an immutable logical
+#: plan, so reusing one across queries is safe, and re-resolving a parquet
+#: source costs a file listing + footer schema read per call (0.03-0.08s ×
+#: tables × queries — the dominant plan-construction cost in multi-table
+#: workloads). The mtime key gives the same regenerated-fixture freshness
+#: contract as footer_schema; a hit costs one mtime walk.
+_scan_cache: dict[tuple[int, str, int], tuple[DataFrame, tuple[str, ...]]] = {}
 
 
-def _base_scan(spark: SparkSession, path: str) -> DataFrame:
+def _base_scan(spark: SparkSession, path: str) -> tuple[DataFrame, tuple[str, ...]]:
     key = (id(spark), path, _footer_mtime_ns(path))
-    df = _scan_cache.get(key)
-    if df is None:
+    hit = _scan_cache.get(key)
+    if hit is None:
         if len(_scan_cache) > 256:  # bound growth across many dirs/sessions
             _scan_cache.clear()
-        df = lowercase_columns(spark.read.parquet(path))
-        _scan_cache[key] = df
-    return df
+        nanos = tuple(c.lower() for c in _nanos_timestamp_columns(path))
+        hit = _scan_cache[key] = (lowercase_columns(spark.read.parquet(path)), nanos)
+    return hit
 
 
 def load_table(
@@ -252,19 +258,16 @@ def load_table(
     ordinary (pushable) timestamp predicate.
     """
     ensure_runtime_conf(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = _base_scan(spark, path)
-    nanos_cols = [c.lower() for c in _nanos_timestamp_columns(path)]
+    df, nanos_cols = _base_scan(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
     if ts_range is not None:
         col, lo, hi = ts_range
         col = col.lower()
+        raw = F.col(col)
         if col in nanos_cols:
             to_ns = lambda s: F.unix_micros(F.lit(s).cast("timestamp")) * 1000  # noqa: E731
-            raw = F.col(col)
         else:
             to_ns = lambda s: F.lit(s).cast("timestamp")  # noqa: E731
-            raw = F.col(col)
         if lo is not None:
             df = df.filter(raw >= to_ns(lo))
         if hi is not None:
@@ -272,13 +275,13 @@ def load_table(
 
     # Repair TIMESTAMP(NANOS) columns read as raw longs (see session.py):
     # integer-divide to micros (truncation, matching a ns→us timestamp cast)
-    # and rebuild the timestamp. Stays in whole-stage codegen.
-    for col in nanos_cols:
-        if col in df.columns:
-            # `div` (integer division) — ns epochs exceed double's 2^53 exact
-            # range, so a float divide would corrupt the low-order digits.
-            df = df.withColumn(col, F.expr(f"timestamp_micros(`{col}` div 1000)"))
-    return df
+    # and rebuild the timestamp, in one projection. Stays in whole-stage
+    # codegen. `div` (integer division) — ns epochs exceed double's 2^53
+    # exact range, so a float divide would corrupt the low-order digits.
+    repair = {
+        c: F.expr(f"timestamp_micros(`{c}` div 1000)") for c in nanos_cols if c in df.columns
+    }
+    return df.withColumns(repair) if repair else df
 
 
 def fixture_relationships():

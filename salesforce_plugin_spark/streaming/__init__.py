@@ -1,29 +1,1 @@
-from salesforce_plugin_spark.streaming.upsert import (
-    run_stream_near_dedup,
-    run_stream_scd2,
-    run_stream_upsert,
-    upsert_batch,
-)
-from salesforce_plugin_spark.streaming.windows import (
-    dedup_stream,
-    dedup_stream_by_content,
-    enrich_stream,
-    incremental_predicate,
-    sessionized_events,
-    stream_events,
-    windowed_event_counts,
-)
-
-__all__ = [
-    "stream_events",
-    "windowed_event_counts",
-    "sessionized_events",
-    "dedup_stream",
-    "dedup_stream_by_content",
-    "enrich_stream",
-    "incremental_predicate",
-    "run_stream_near_dedup",
-    "run_stream_scd2",
-    "run_stream_upsert",
-    "upsert_batch",
-]
+"""Streaming sources and folds; each name is imported from its module, e.g. ``streaming.upsert``."""

@@ -142,3 +142,46 @@ def test_scan_cache_invalidates_on_fixture_rewrite(spark, tmp_path):
     d2 = load_table(spark, str(tmp_path), "t")
     assert d2 is not d1
     assert d2.count() == 3 and sorted(r.x for r in d2.collect()) == [10, 20, 30]
+
+
+def test_load_table_repairs_a_nanos_timestamp_file(spark, tmp_path):
+    """A real TIMESTAMP(NANOS) parquet file: ``ts`` reads back as a
+    timestamp truncated to µs, and ``ts_range`` keeps exactly the rows in
+    ``[lo, hi)`` with both bounds pushed into the scan as raw-long
+    comparisons (epoch nanos), not as a filter over the repaired column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = 1_704_844_800 * 10**9  # 2024-01-10 00:00:00 UTC in epoch nanos
+    nanos = [base + h * 3_600 * 10**9 + 123_456_789 for h in range(48)]
+    pq.write_table(
+        pa.table({"id": list(range(48)), "ts": pa.array(nanos, pa.timestamp("ns"))}),
+        str(tmp_path / "ev.parquet"),
+        version="2.6",
+    )
+
+    df = load_table(spark, str(tmp_path), "ev")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    micros = df.select("id", F.unix_micros("ts").alias("us")).collect()
+    assert {r.id: r.us for r in micros} == {i: n // 1000 for i, n in enumerate(nanos)}
+
+    lo, hi = "2024-01-10 05:00:00", "2024-01-11 02:00:00"
+    cut = load_table(spark, str(tmp_path), "ev", ts_range=("TS", lo, hi))
+    assert sorted(r.id for r in cut.collect()) == list(range(5, 26))
+    plan = cut._jdf.queryExecution().executedPlan().toString()
+    pushed = plan[plan.index("PushedFilters: ["):].split("]", 1)[0]
+    lo_ns, hi_ns = base + 5 * 3_600 * 10**9, base + 26 * 3_600 * 10**9
+    assert f"GreaterThanOrEqual(ts,{lo_ns})" in pushed
+    assert f"LessThan(ts,{hi_ns})" in pushed
+
+
+def test_timestamp_unit_logs_an_uninspectable_footer(tmp_path, caplog):
+    from salesforce_plugin_spark.sources.catalog import timestamp_unit
+
+    path = tmp_path / "x.parquet"
+    path.write_bytes(b"not a parquet file")
+    with caplog.at_level("DEBUG", logger="salesforce_plugin_spark.sources.catalog"):
+        assert timestamp_unit(str(path), "ts") is None
+    records = [r for r in caplog.records if r.name == "salesforce_plugin_spark.sources.catalog"]
+    assert len(records) == 1 and records[0].levelname == "DEBUG"
+    assert str(path) in records[0].getMessage()
