@@ -76,7 +76,7 @@ def _scaled_semantic_seeds(e: DataFrame) -> DataFrame:
     )
 
 
-def _slice_to_files(spark, slices, tmp, schema_cols):
+def _slice_to_files(slices, tmp):
     """Write each slice as one parquet file with ascending mtimes under
     tmp/src (the shared micro-batch scaffolding of the stream gates)."""
     import os

@@ -805,10 +805,7 @@ def q_stream_class_balance(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_cb_")
     try:
         src = _slice_to_files(
-            spark,
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -862,10 +859,7 @@ def q_stream_vocab_coverage(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_vc_")
     try:
         src = _slice_to_files(
-            spark,
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema("doc_id long, text string")
@@ -917,7 +911,6 @@ def q_stream_user_growth(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_ug_")
     try:
         src = _slice_to_files(
-            spark,
             [
                 ev.filter(F.col("event_id") % 3 == 0).select("user_id", "ts"),
                 ev.filter(F.col("event_id") % 3 == 1).select("user_id", "ts"),
@@ -926,7 +919,6 @@ def q_stream_user_growth(spark, sf_dir):
                 ).select("user_id", "ts"),
             ],
             tmp,
-            None,
         )
         stream = (
             spark.readStream.schema("user_id long, ts timestamp")
@@ -977,10 +969,7 @@ def q_stream_rolling_quantiles(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_rq_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1042,10 +1031,7 @@ def q_stream_fano(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_fano_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1099,10 +1085,7 @@ def q_stream_dow(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_dow_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1157,10 +1140,7 @@ def q_stream_theil_sen(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_ts_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1220,10 +1200,7 @@ def q_stream_temperature_mix(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_tm_")
     try:
         src = _slice_to_files(
-            spark,
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1374,7 +1351,7 @@ def q_stream_hll(spark, sf_dir):
     try:
         slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
         slices.append(e.filter(F.col("event_id") % 3 == 0))  # replay
-        src = _slice_to_files(spark, slices, tmp, None)
+        src = _slice_to_files(slices, tmp)
         stream = (
             spark.readStream.schema(
                 "event_id long, event_type string, user_id long"
@@ -1444,10 +1421,7 @@ def q_stream_wilson(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_wilson_")
     try:
         src = _slice_to_files(
-            spark,
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1505,10 +1479,7 @@ def q_stream_abtest(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_ab_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1589,10 +1560,7 @@ def q_stream_calibration(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_cal_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1679,10 +1647,7 @@ def q_stream_zscore(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_z_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1756,10 +1721,7 @@ def q_stream_kanonymity(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_kanon_")
     try:
         src = _slice_to_files(
-            spark,
-            [c.filter(F.col("c_custkey") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [c.filter(F.col("c_custkey") % 3 == i) for i in range(3)], tmp
         )
 
         def mkstream():
@@ -1849,10 +1811,7 @@ def q_stream_changepoint(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_cp_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1913,10 +1872,7 @@ def q_stream_ks(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_ks_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -1985,10 +1941,7 @@ def q_stream_benford(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_benford_")
     try:
         src = _slice_to_files(
-            spark,
-            [o.filter(F.col("o_orderkey") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [o.filter(F.col("o_orderkey") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -2054,10 +2007,7 @@ def q_stream_itemcf(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_itemcf_")
     try:
         src = _slice_to_files(
-            spark,
-            [li.filter(F.col("l_orderkey") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [li.filter(F.col("l_orderkey") % 3 == i) for i in range(3)], tmp
         )
 
         def mkstream():
@@ -2136,10 +2086,7 @@ def q_stream_gram_power(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_gram_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("vec_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("vec_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -2228,10 +2175,7 @@ def q_stream_autocorr(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_ac_")
     try:
         src = _slice_to_files(
-            spark,
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema(
@@ -2291,10 +2235,7 @@ def q_stream_kneser_ney(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_kn_")
     try:
         src = _slice_to_files(
-            spark,
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema("doc_id long, lang string, text string")
@@ -2352,10 +2293,7 @@ def q_stream_repeated_spans(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="conf_stream_spans_")
     try:
         src = _slice_to_files(
-            spark,
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema("doc_id long, text string")
@@ -2478,10 +2416,7 @@ def q_stream_distill(spark, sf_dir):
     sums = ["x1", "x2", "y", "x1x1", "x2x2", "x1x2", "x1y", "x2y"]
     try:
         src = _slice_to_files(
-            spark,
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)],
-            tmp,
-            None,
+            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
         )
         stream = (
             spark.readStream.schema("doc_id long, text string")

@@ -674,16 +674,6 @@ def simhash_from_hashes(hashes: Column, bits: int = 64) -> Column:
     return out
 
 
-def simhash64(text: Column | str, bits: int = 64) -> Column:
-    """Column-expression SimHash (Charikar construction: per bit, sum +1/-1
-    over token hashes, take the sign). Convenience form for one-off use —
-    the inline token-hash subtree re-evaluates per bit, so for whole-table
-    fingerprinting use ``simhash_table`` instead."""
-    return simhash_from_hashes(
-        F.transform(tokens(text), lambda t: F.xxhash64(F.lower(t))), bits
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit simhashes (bit_count of xor)."""
     return F.bit_count(a.bitwiseXOR(b))

@@ -19,7 +19,9 @@ subsampled JPEG, MP3 (``decode_audio`` raises ``NotImplementedError``
 unless a decoder callable is injected).
 Everything around the seam — schema contract, Arrow batch shape, UDF
 signature, partition behavior — is tested either way
-(tests/test_multimodal.py, tests/test_round9_fixes.py).
+(tests/test_io_multimodal.py; the BMP/WAV, PNG and JPEG decoders in
+tests/test_round9_fixes.py, tests/test_round10_fixes.py and
+tests/test_round11_fixes.py).
 
 Scale notes: ``mapInPandas`` streams Arrow record batches through one Python
 worker per core with no shuffle; payload bytes never visit the driver. For

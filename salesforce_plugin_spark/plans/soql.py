@@ -220,18 +220,14 @@ class _Parser:
                 )
             q["security_enforced"] = True
         if self.kw("GROUP", "BY"):
-            if self.kw("ROLLUP"):
-                q["grouping"] = "rollup"
-                self.expect("(")
-                q["group"] = self.parse_expr_list(until=")")
+            for mode in ("ROLLUP", "CUBE"):
+                if self.kw(mode):
+                    q["grouping"] = mode.lower()
+                    self.expect("(")
+                    break
+            q["group"] = self.parse_expr_list()
+            if q["grouping"] != "plain":
                 self.expect(")")
-            elif self.kw("CUBE"):
-                q["grouping"] = "cube"
-                self.expect("(")
-                q["group"] = self.parse_expr_list(until=")")
-                self.expect(")")
-            else:
-                q["group"] = self.parse_expr_list()
         if self.kw("HAVING"):
             q["having"] = self.parse_or()
         if self.kw("ORDER", "BY"):
@@ -254,7 +250,7 @@ class _Parser:
             raise SoqlError(f"SOQL: trailing input {t.text!r} at {t.pos}")
         return q
 
-    def parse_expr_list(self, until: str | None = None) -> list[dict]:
+    def parse_expr_list(self) -> list[dict]:
         items = [self.parse_value_expr()]
         while self.peek() and self.peek().text == ",":
             self.next()

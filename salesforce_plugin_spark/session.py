@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import logging
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -48,7 +49,8 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
-_conf_applied: "weakref.WeakSet" = None  # type: ignore[assignment]
+# built at import, so threads making their first calls at once share one set
+_conf_applied: weakref.WeakSet = weakref.WeakSet()
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
@@ -57,11 +59,6 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     call, and each ``conf.set`` is a py4j round trip — 7 of them per call
     add up across a multi-table query. A session seen before is returned
     untouched; ``_conf_applied`` holds weak refs so sessions can be GC'd."""
-    global _conf_applied
-    import weakref
-
-    if _conf_applied is None:
-        _conf_applied = weakref.WeakSet()
     if spark in _conf_applied:
         return spark
     for key, value in RUNTIME_CONF.items():

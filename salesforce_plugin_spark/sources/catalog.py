@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import logging
 import os
+import weakref
 from functools import lru_cache
 
 import pyspark.sql.functions as F
@@ -93,11 +94,6 @@ def footer_schema(path: str):
     if resolved is None:
         return None
     return _footer_schema_at(resolved, _footer_mtime_ns(resolved))
-
-
-def clear_schema_cache() -> None:
-    """Drop all cached footer schemas (test/ops hook)."""
-    _footer_schema_at.cache_clear()
 
 
 def timestamp_unit(path: str, col: str) -> str | None:
@@ -327,7 +323,8 @@ def fixture_relationships():
 #: partition counts memoized per DataFrame object — the ``.rdd`` probe
 #: forces plan analysis + an RDD conversion (tens of ms over py4j), and
 #: with base scans memoized the same plan object recurs across queries.
-_partition_count_cache: "weakref.WeakKeyDictionary" = None  # type: ignore
+#: Built at import, so concurrent first callers share one cache.
+_partition_count_cache: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def parallelized(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -340,11 +337,6 @@ def parallelized(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     fewer partitions than requested — at real scale (many row groups/files)
     this is a no-op and no shuffle is added.
     """
-    global _partition_count_cache
-    import weakref
-
-    if _partition_count_cache is None:
-        _partition_count_cache = weakref.WeakKeyDictionary()
     if min_partitions is None:
         min_partitions = df.sparkSession.sparkContext.defaultParallelism
     n = _partition_count_cache.get(df)

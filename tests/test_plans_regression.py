@@ -56,8 +56,11 @@ def registry_plans(spark):
 
     def build(item):
         name, fn = item
-        df = fn(spark, SF)
-        return name, (df.schema, _plan_string(df))
+        try:
+            df = fn(spark, SF)
+            return name, (df.schema, _plan_string(df))
+        except Exception as e:
+            raise RuntimeError(f"{name}: {e}") from e
 
     with ThreadPoolExecutor(max_workers=16) as pool:
         return dict(pool.map(build, QUERIES.items()))
@@ -260,11 +263,7 @@ def test_tpch_q11_reuses_per_part_exchange(spark):
     ReusedExchange so the fact table is aggregated once."""
     df = QUERIES["q_tpch_q11"](spark, SF)
     df.collect()
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    plan = _plan_string(df)
     assert "ReusedExchange" in plan
 
 

@@ -513,14 +513,15 @@ def _run_many(sdf, duck, cases):
     so the rng draw sequence (and thus the corpus) is byte-identical
     to the old loop; each thread replays SQL on its own ``duck.cursor()``
     (DuckDB connections are not safe for concurrent queries, cursors
-    are separate connections over the same database)."""
+    are separate connections over the same database), closed when its
+    case is done."""
     from concurrent.futures import ThreadPoolExecutor
+    from contextlib import closing
 
     def one(case):
         soql, sql, fsm, relationships = case
-        return _run_one(
-            sdf, duck.cursor(), soql, sql, fsm, relationships=relationships
-        )
+        with closing(duck.cursor()) as cur:
+            return _run_one(sdf, cur, soql, sql, fsm, relationships=relationships)
 
     with ThreadPoolExecutor(max_workers=8) as pool:
         return list(pool.map(one, cases))

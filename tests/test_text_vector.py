@@ -558,3 +558,80 @@ def test_kmeans_margin_agrees_with_assign_and_orders(spark):
     # k = 1: no runner-up -> NULL margin
     one = kmeans_margin(vecs, seeds.filter("cluster = 0")).collect()
     assert all(r.margin is None for r in one)
+
+
+# --- exact-integer kernel ---
+
+def test_quantize_rounds_half_up_like_f_round(spark):
+    from salesforce_plugin_spark.functions.vector import quantize
+
+    halves = [0.5, -0.5, 1.5, -1.5, 2.5, -2.5, 0.25, -0.25, 0.0]
+    df = spark.createDataFrame([(halves,)], "v array<double>")
+    for q in (1, 10):
+        got, ref = df.select(
+            quantize(F.col("v"), q).alias("got"),
+            F.transform("v", lambda x: F.round(x * q, 0).cast("long")).alias("ref"),
+        ).first()
+        assert got == ref
+    assert df.select(quantize(F.col("v"), 1)).first()[0] == [1, -1, 2, -2, 3, -3, 0, 0, 0]
+    assert df.select(quantize(F.col("v"), 10)).first()[0][6:8] == [3, -3]
+
+
+def test_quantize_widens_float_before_multiplying(spark):
+    """float32(0.0025) is 0.0024999999441...: times 1000 in float32 it
+    rounds to exactly 2.5 (-> 3), in double it stays below the half
+    (-> 2). quantize must give the double result, as the oracles do."""
+    import numpy as np
+
+    from salesforce_plugin_spark.functions.vector import quantize
+
+    x = np.float32(0.0025)
+    f32 = float(x * np.float32(1000))
+    f64 = float(x) * 1000
+    assert f32 == 2.5 and f64 < 2.5  # the two products really differ
+    df = spark.createDataFrame([([float(x)],)], "v array<float>")
+    assert df.select(quantize(F.col("v"), 1000)).first()[0] == [2]
+
+
+def test_ldot_lnorm2_exact_past_2_pow_53(spark):
+    from salesforce_plugin_spark.functions.vector import ldot, lnorm2, lsum
+
+    a = [2**27 + 1, 2**27 + 3, -(2**27 + 5)]
+    b = [2**27 - 1, 2**27 + 7, 2**27 + 9]
+    dot_ab = sum(x * y for x, y in zip(a, b))
+    norm_a = sum(x * x for x in a)
+    assert abs(norm_a) > 2**53 and float(a[0]) ** 2 != a[0] ** 2
+    df = spark.createDataFrame([(a, b)], "a array<long>, b array<long>")
+    r = df.select(
+        ldot(F.col("a"), F.col("b")).alias("d"),
+        lnorm2(F.col("a")).alias("na"),
+        lnorm2(F.col("b")).alias("nb"),
+        lsum(F.col("a")).alias("s"),
+    ).first()
+    assert r.d == dot_ab
+    assert r.na == norm_a
+    assert r.nb == sum(y * y for y in b)
+    assert r.s == sum(a)
+
+
+def test_gram_power_step_equals_one_iteration(spark):
+    from salesforce_plugin_spark.functions.vector import (
+        gram_power_iterations,
+        gram_power_step,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, [0.5, -0.25, 0.125]),
+            (2, [1.0, 0.75, -0.5]),
+            (3, [-0.125, 0.0, 0.2505]),
+        ],
+        "id long, v array<float>",
+    )
+    v0 = spark.createDataFrame([([0.3, -0.6, 0.9],)], "v0 array<double>")
+    step = {r.dim: r.gv for r in gram_power_step(df, "id", "v", v0).collect()}
+    it1 = {
+        r.dim: r.gv
+        for r in gram_power_iterations(df, "id", "v", v0, iterations=1).collect()
+    }
+    assert step == it1 and len(step) == 3
