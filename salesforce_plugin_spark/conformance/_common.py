@@ -76,26 +76,6 @@ def _scaled_semantic_seeds(e: DataFrame) -> DataFrame:
     )
 
 
-def _slice_to_files(slices, tmp):
-    """Write each slice as one parquet file with ascending mtimes under
-    tmp/src (the shared micro-batch scaffolding of the stream gates)."""
-    import os
-    import shutil
-    import time as _time
-
-    src = os.path.join(tmp, "src")
-    os.makedirs(src, exist_ok=True)
-    now = int(_time.time())
-    for i, sl in enumerate(slices):
-        part = os.path.join(tmp, f"stage{i}")
-        sl.coalesce(1).write.mode("overwrite").parquet(part)
-        pf = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"batch-{i}.parquet")
-        shutil.move(os.path.join(part, pf), dst)
-        os.utime(dst, (now + i * 60, now + i * 60))
-    return src
-
-
 def _flatten_decimal_outputs(fn: QueryFn) -> QueryFn:
     """Cast any DECIMAL column in a query's FINAL projection to DOUBLE.
 
@@ -770,7 +750,6 @@ __all__ = [
     "_dec",
     "_flatten_decimal_outputs",
     "_scaled_semantic_seeds",
-    "_slice_to_files",
     "_sumd",
     "_bpe_apply_oracle",
     "_byte_histogram_oracle",

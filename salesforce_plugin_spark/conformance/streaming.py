@@ -1,13 +1,68 @@
 """F6 streaming equivalence faces (run_stream_* drives whose final state must reproduce the batch oracle).
 
-Split from the single-file conformance registry in round 6; byte-identical
-query builders and oracle SQL. The ordered public registry lives in
-``salesforce_plugin_spark.conformance`` (the package __init__).
+Most entries cut a table into slices, stage them as the micro-batches of
+a parquet file source with :func:`_staged_stream`, drain that stream
+through a ``run_stream_*`` fold into state under the staging dir, and
+read the state out. The staging dir is removed when the ``with`` block
+ends, so each result that reads from it is detached inside the block
+with ``.localCheckpoint(eager=True)``, the one detach idiom here. The
+ordered public registry lives in ``salesforce_plugin_spark.conformance``
+(the package __init__).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import time
+from contextlib import contextmanager
+
 from salesforce_plugin_spark.conformance._common import *  # noqa: F401,F403
+
+
+@contextmanager
+def _staged_stream(spark, slices, prefix):
+    """Stage ``slices`` as the micro-batches of a parquet file source.
+
+    Makes a temp dir named with ``prefix`` and writes each slice as one
+    ``coalesce(1)`` parquet file ``src/batch-<i>.parquet`` in it, with
+    mtimes ascending in slice order. The file source reads the oldest
+    file first and one file per trigger makes each file one
+    micro-batch, so batch ``i`` is slice ``i``: time-sliced files reach a
+    fold in per-key observation order, which q_stream_scd2 and
+    q_stream_cusum rely on.
+
+    Yields ``(stream, tmp)``. ``stream()`` returns a fresh streaming
+    DataFrame over the files with the schema of ``slices[0]``; call it
+    once per fold. ``tmp`` is the dir for the caller's state and
+    checkpoint paths. The dir is removed on exit, also when the body
+    raises, and the exception reaches the caller.
+    """
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    src = os.path.join(tmp, "src")
+    try:
+        os.makedirs(src)
+        now = int(time.time())
+        for i, sl in enumerate(slices):
+            part = os.path.join(tmp, f"stage{i}")
+            sl.coalesce(1).write.mode("overwrite").parquet(part)
+            pf = next(f for f in os.listdir(part) if f.endswith(".parquet"))
+            dst = os.path.join(src, f"batch-{i}.parquet")
+            shutil.move(os.path.join(part, pf), dst)
+            os.utime(dst, (now + i * 60, now + i * 60))
+        schema = slices[0].schema
+
+        def stream():
+            return (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+
+        yield stream, tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def assert_stream_matches_batch(
@@ -46,11 +101,6 @@ def q_stream_near_dedup(spark, sf_dir):
     state accumulated so far (streaming/upsert.run_stream_near_dedup).
     The accumulated assignments must be row-identical to the
     from-scratch full-corpus run: the oracle IS q_near_dedup's SQL."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from salesforce_plugin_spark.streaming.upsert import (
         read_near_dedup_assignments,
         run_stream_near_dedup,
@@ -64,26 +114,10 @@ def q_stream_near_dedup(spark, sf_dir):
         d.filter((F.col("doc_id") > cuts[0]) & (F.col("doc_id") <= cuts[1])),
         d.filter(F.col("doc_id") > cuts[1]),
     ]
-    tmp = tempfile.mkdtemp(prefix="conf_stream_neardedup_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    try:
-        now = int(_time.time())
-        for i, sl in enumerate(slices):
-            part = os.path.join(tmp, f"stage{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(part)
-            pf = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"batch-{i}.parquet")
-            shutil.move(os.path.join(part, pf), dst)
-            os.utime(dst, (now + i * 60, now + i * 60))
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _staged_stream(spark, slices, "conf_stream_neardedup_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_near_dedup(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             id_col="doc_id",
@@ -92,13 +126,9 @@ def q_stream_near_dedup(spark, sf_dir):
             bands=2,
             shingle_n=3,
         )
-        out = (
-            read_near_dedup_assignments(spark, state, "doc_id")
-            .localCheckpoint(eager=True)  # detach from the tmp path
+        return read_near_dedup_assignments(spark, state, "doc_id").localCheckpoint(
+            eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -302,24 +332,16 @@ def q_stream_join(spark, sf_dir):
 def q_stream_scd2(spark, sf_dir):
     """F6 × warehouse modeling: SCD2 history maintained FROM A STREAM
     (streaming/upsert.py run_stream_scd2) — the events feed arrives as
-    three time-sliced micro-batches (maxFilesPerTrigger=1, ascending
+    three time-sliced micro-batches (one file per trigger, ascending
     mtimes so the file source drains them in observation order) and each
     batch folds into the interval table via scd2_apply_changes. The gate
     proves the streamed history is row-identical to a from-scratch batch
     rebuild: the oracle is the full-feed SCD2 SQL (same as q_scd2)."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from salesforce_plugin_spark.streaming.upsert import run_stream_scd2
 
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_scd2_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
     cuts = ["2024-01-10", "2024-01-20"]
     slices = [
         e.filter(F.col("ts") < F.lit(cuts[0]).cast("timestamp")),
@@ -329,29 +351,10 @@ def q_stream_scd2(spark, sf_dir):
         ),
         e.filter(F.col("ts") >= F.lit(cuts[1]).cast("timestamp")),
     ]
-    try:
-        now = int(_time.time())
-        for i, sl in enumerate(slices):
-            part = os.path.join(tmp, f"stage{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(part)
-            pf = next(
-                f for f in os.listdir(part) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"batch-{i}.parquet")
-            shutil.move(os.path.join(part, pf), dst)
-            # ascending mtimes: the file source processes oldest-first,
-            # which IS the per-key observation order (time-sliced files)
-            os.utime(dst, (now + i * 60, now + i * 60))
-        stream = (
-            spark.readStream.schema(
-                "user_id long, event_type string, ts timestamp, event_id long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _staged_stream(spark, slices, "conf_stream_scd2_") as (stream, tmp):
         table = os.path.join(tmp, "scd2")
         run_stream_scd2(
-            stream,
+            stream(),
             table,
             os.path.join(tmp, "ckpt"),
             key_cols=["user_id"],
@@ -359,7 +362,7 @@ def q_stream_scd2(spark, sf_dir):
             ts_col="ts",
             tiebreak_cols=["event_id"],
         )
-        out = (
+        return (
             spark.read.parquet(table)
             .select(
                 "user_id",
@@ -368,11 +371,8 @@ def q_stream_scd2(spark, sf_dir):
                 F.unix_micros(F.col("__valid_to")).alias("valid_to_us"),
                 F.col("__is_current").alias("is_current"),
             )
-            .localCheckpoint(eager=True)  # detach from the tmp path
+            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def q_stream_kmv(spark, sf_dir):
@@ -420,10 +420,6 @@ def q_stream_heavy_hitters(spark, sf_dir):
     state must therefore match q_heavy_hitters' oracle exactly (the
     oracle IS reused verbatim). Per-batch cost: one bounded aggregate;
     state grows ≤ depth·width rows per batch."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.functions.sketch import cm_estimate
     from salesforce_plugin_spark.streaming.upsert import (
         read_cm_state,
@@ -438,24 +434,9 @@ def q_stream_heavy_hitters(spark, sf_dir):
         ev.filter((F.col("event_id") > cuts[0]) & (F.col("event_id") <= cuts[1])),
         ev.filter(F.col("event_id") > cuts[1]),
     ]
-    tmp = tempfile.mkdtemp(prefix="conf_stream_cm_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    try:
-        for i, sl in enumerate(slices):
-            part = os.path.join(tmp, f"stage{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(part)
-            pf = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-            shutil.move(
-                os.path.join(part, pf), os.path.join(src, f"batch-{i}.parquet")
-            )
-        stream = (
-            spark.readStream.schema("event_id long, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _staged_stream(spark, slices, "conf_stream_cm_") as (stream, tmp):
         run_stream_cm(
-            stream,
+            stream(),
             os.path.join(tmp, "state"),
             os.path.join(tmp, "ckpt"),
             "user_id",
@@ -463,10 +444,8 @@ def q_stream_heavy_hitters(spark, sf_dir):
             depth=4,
         )
         grid = read_cm_state(spark, os.path.join(tmp, "state")).localCheckpoint(
-            eager=True  # detach from the tmp path before it is removed
+            eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     est = cm_estimate(grid, ev, "user_id", width=256, depth=4)
     exact = ev.groupBy(F.col("user_id").alias("value")).agg(
         F.count(F.lit(1)).alias("exact_n")
@@ -488,10 +467,6 @@ def q_stream_quantiles(spark, sf_dir):
     histogram over the full table — quantiles elected from streamed
     state must match q_quantile_sketch's oracle exactly (the oracle IS
     reused verbatim). Per-batch cost: one <= n_bins-row aggregate."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.functions.sketch import quantiles_from_counts
     from salesforce_plugin_spark.streaming.upsert import (
         read_histogram_state,
@@ -506,24 +481,9 @@ def q_stream_quantiles(spark, sf_dir):
         ev.filter((F.col("event_id") > cuts[0]) & (F.col("event_id") <= cuts[1])),
         ev.filter(F.col("event_id") > cuts[1]),
     ]
-    tmp = tempfile.mkdtemp(prefix="conf_stream_hist_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    try:
-        for i, sl in enumerate(slices):
-            part = os.path.join(tmp, f"stage{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(part)
-            pf = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-            shutil.move(
-                os.path.join(part, pf), os.path.join(src, f"batch-{i}.parquet")
-            )
-        stream = (
-            spark.readStream.schema("event_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _staged_stream(spark, slices, "conf_stream_hist_") as (stream, tmp):
         run_stream_histogram(
-            stream,
+            stream(),
             os.path.join(tmp, "state"),
             os.path.join(tmp, "ckpt"),
             "value",
@@ -533,9 +493,7 @@ def q_stream_quantiles(spark, sf_dir):
         )
         hist = read_histogram_state(
             spark, os.path.join(tmp, "state")
-        ).localCheckpoint(eager=True)  # detach from tmp before it is removed
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        ).localCheckpoint(eager=True)
     return quantiles_from_counts(
         hist, qs=[0.5, 0.9, 0.99], lo=0.0, hi=500.0, n_bins=1000
     )
@@ -550,19 +508,11 @@ def q_stream_rolling_wau(spark, sf_dir):
     accumulated state equals the one-shot batch run; oracle is
     q_rolling_wau's SQL VERBATIM. Batches here are deliberately
     OVERLAPPING id slices to prove the set-state claim."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from salesforce_plugin_spark.streaming.upsert import (
         read_rolling_distinct,
         run_stream_active_days,
     )
 
-    tmp = tempfile.mkdtemp(prefix="conf_stream_wau_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
     ev = load_table(spark, sf_dir, "events")
     # deliberately OVERLAPPING slices (mod-3 residues plus a repeated
     # band) — set semantics make replay/overlap harmless
@@ -573,31 +523,14 @@ def q_stream_rolling_wau(spark, sf_dir):
             (F.col("event_id") % 3 == 2) | (F.col("event_id") % 5 == 0)
         ).select("user_id", "ts"),
     ]
-    try:
-        now = int(_time.time())
-        for i, sl in enumerate(slices):
-            part = os.path.join(tmp, f"stage{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(part)
-            pf = next(
-                f for f in os.listdir(part) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"batch-{i}.parquet")
-            shutil.move(os.path.join(part, pf), dst)
-            os.utime(dst, (now + i * 60, now + i * 60))
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _staged_stream(spark, slices, "conf_stream_wau_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_active_days(
-            stream, state, os.path.join(tmp, "ckpt"), "user_id", "ts"
+            stream(), state, os.path.join(tmp, "ckpt"), "user_id", "ts"
         )
-        out = read_rolling_distinct(spark, state, window_days=7)
-        out = out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return read_rolling_distinct(spark, state, window_days=7).localCheckpoint(
+            eager=True
+        )
 
 
 def q_stream_cusum(spark, sf_dir):
@@ -619,11 +552,7 @@ def q_stream_cusum(spark, sf_dir):
     passes and the driver still records a hash mismatch, the
     divergence is Spark-vs-DuckDB on the driver host (q_cusum sits in
     the same window to confirm), not the stream fold."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
+    from salesforce_plugin_spark.operators.timeseries import cusum_alarms
     from salesforce_plugin_spark.streaming.upsert import run_stream_cusum
 
     e = load_table(spark, sf_dir, "events")
@@ -633,9 +562,6 @@ def q_stream_cusum(spark, sf_dir):
         "event_id",
         F.round(F.col("value") * 100, 0).cast("long").alias("v"),
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_cusum_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
     cuts = ["2024-01-10", "2024-01-20"]
     slices = [
         base.filter(F.col("ts") < F.lit(cuts[0]).cast("timestamp")),
@@ -645,27 +571,10 @@ def q_stream_cusum(spark, sf_dir):
         ),
         base.filter(F.col("ts") >= F.lit(cuts[1]).cast("timestamp")),
     ]
-    try:
-        now = int(_time.time())
-        for i, sl in enumerate(slices):
-            part = os.path.join(tmp, f"stage{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(part)
-            pf = next(
-                f for f in os.listdir(part) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"batch-{i}.parquet")
-            shutil.move(os.path.join(part, pf), dst)
-            os.utime(dst, (now + i * 60, now + i * 60))
-        stream = (
-            spark.readStream.schema(
-                "user_id long, ts timestamp, event_id long, v long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _staged_stream(spark, slices, "conf_stream_cusum_") as (stream, tmp):
         out_dir = os.path.join(tmp, "alarms")
         run_stream_cusum(
-            stream,
+            stream(),
             out_dir,
             os.path.join(tmp, "state"),
             os.path.join(tmp, "ckpt"),
@@ -682,10 +591,6 @@ def q_stream_cusum(spark, sf_dir):
             .select("user_id", "ts", "v", "event_id", "cusum", "alarm")
             .localCheckpoint(eager=True)
         )
-        from salesforce_plugin_spark.operators.timeseries import (
-            cusum_alarms,
-        )
-
         twin = cusum_alarms(
             base,
             ["user_id"],
@@ -696,6 +601,7 @@ def q_stream_cusum(spark, sf_dir):
             threshold=50000,
             tiebreak_cols=["event_id"],
         )
+        src = os.path.join(tmp, "src")
         files = sorted(
             (f, os.path.getsize(os.path.join(src, f)),
              int(os.path.getmtime(os.path.join(src, f))))
@@ -707,8 +613,6 @@ def q_stream_cusum(spark, sf_dir):
             f"slice_rows={[sl.count() for sl in slices]}"
         )
         assert_stream_matches_batch(out, twin, "q_stream_cusum", ctx)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return oracle_cross_check(out, "q_stream_cusum", sf_dir)
 
 
@@ -720,11 +624,6 @@ def q_stream_interarrival(spark, sf_dir):
     against the carry's last_us. The final state must reproduce the
     one-shot batch stats, so the oracle is q_interarrival's SQL
     VERBATIM (the run_stream_cusum equivalence discipline)."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from salesforce_plugin_spark.streaming.upsert import (
         read_interarrival_state,
         run_stream_interarrival,
@@ -732,9 +631,6 @@ def q_stream_interarrival(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "events")
     base = e.select("user_id", "ts")
-    tmp = tempfile.mkdtemp(prefix="conf_stream_ia_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
     cuts = ["2024-01-10", "2024-01-20"]
     slices = [
         base.filter(F.col("ts") < F.lit(cuts[0]).cast("timestamp")),
@@ -744,38 +640,18 @@ def q_stream_interarrival(spark, sf_dir):
         ),
         base.filter(F.col("ts") >= F.lit(cuts[1]).cast("timestamp")),
     ]
-    try:
-        now = int(_time.time())
-        for i, sl in enumerate(slices):
-            part = os.path.join(tmp, f"stage{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(part)
-            pf = next(
-                f for f in os.listdir(part) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"batch-{i}.parquet")
-            shutil.move(os.path.join(part, pf), dst)
-            os.utime(dst, (now + i * 60, now + i * 60))
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _staged_stream(spark, slices, "conf_stream_ia_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_interarrival(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             key_cols=["user_id"],
             ts_col="ts",
         )
-        rows = read_interarrival_state(spark, state).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "user_id long, n_gaps long, min_us long, max_us long, "
-        "mean_us long, burst_x1000 long",
-    )
+        return read_interarrival_state(spark, state).localCheckpoint(
+            eager=True
+        )
 
 
 def q_stream_class_balance(spark, sf_dir):
@@ -787,10 +663,6 @@ def q_stream_class_balance(spark, sf_dir):
     batch report — oracle is q_class_balance's SQL VERBATIM. The label
     cell is derived INSIDE the fold (prepare=), so the stream carries
     raw documents."""
-    import shutil
-    import tempfile
-    import os
-
     from salesforce_plugin_spark.operators.analytics import (
         class_balance_from_counts,
     )
@@ -802,21 +674,11 @@ def q_stream_class_balance(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_cb_")
-    try:
-        src = _slice_to_files(
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, lang string, source string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [d.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_cb_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["cell"],
@@ -827,12 +689,7 @@ def q_stream_class_balance(spark, sf_dir):
         counts = read_summed_counts(spark, state, ["cell"]).select(
             F.col("cell").alias("label"), "n"
         )
-        rows = class_balance_from_counts(counts).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "label string, n long, share_ppm long, gini_ppm long"
-    )
+        return class_balance_from_counts(counts).localCheckpoint(eager=True)
 
 
 def q_stream_vocab_coverage(spark, sf_dir):
@@ -842,10 +699,6 @@ def q_stream_vocab_coverage(spark, sf_dir):
     coverage_from_term_counts and must reproduce the one-shot curve
     (q_vocab_coverage's oracle VERBATIM). State is vocab-bounded per
     batch regardless of event volume."""
-    import shutil
-    import tempfile
-    import os
-
     from salesforce_plugin_spark.functions.text import (
         coverage_from_term_counts,
         tokens as _tokens,
@@ -856,19 +709,11 @@ def q_stream_vocab_coverage(spark, sf_dir):
     )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="conf_stream_vc_")
-    try:
-        src = _slice_to_files(
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [d.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_vc_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["term"],
@@ -879,14 +724,9 @@ def q_stream_vocab_coverage(spark, sf_dir):
         counts = read_summed_counts(spark, state, ["term"]).select(
             "term", F.col("n").alias("__cnt")
         )
-        rows = coverage_from_term_counts(
+        return coverage_from_term_counts(
             counts, cutoffs=[1, 10, 100, 1000]
-        ).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "cutoff long, n_terms long, coverage_ppm long"
-    )
+        ).localCheckpoint(eager=True)
 
 
 def q_stream_user_growth(spark, sf_dir):
@@ -898,48 +738,30 @@ def q_stream_user_growth(spark, sf_dir):
     code. Set semantics make the deliberately OVERLAPPING slices
     harmless (the q_stream_rolling_wau claim); result must equal the
     one-shot batch run — q_user_growth's oracle VERBATIM."""
-    import shutil
-    import tempfile
-    import os
-
     from salesforce_plugin_spark.operators.analytics import user_growth
     from salesforce_plugin_spark.streaming.upsert import (
         run_stream_active_days,
     )
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="conf_stream_ug_")
-    try:
-        src = _slice_to_files(
-            [
-                ev.filter(F.col("event_id") % 3 == 0).select("user_id", "ts"),
-                ev.filter(F.col("event_id") % 3 == 1).select("user_id", "ts"),
-                ev.filter(
-                    (F.col("event_id") % 3 == 2) | (F.col("event_id") % 5 == 0)
-                ).select("user_id", "ts"),
-            ],
-            tmp,
-        )
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [
+        ev.filter(F.col("event_id") % 3 == 0).select("user_id", "ts"),
+        ev.filter(F.col("event_id") % 3 == 1).select("user_id", "ts"),
+        ev.filter(
+            (F.col("event_id") % 3 == 2) | (F.col("event_id") % 5 == 0)
+        ).select("user_id", "ts"),
+    ]
+    with _staged_stream(spark, slices, "conf_stream_ug_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_active_days(
-            stream, state, os.path.join(tmp, "ckpt"), "user_id", "ts"
+            stream(), state, os.path.join(tmp, "ckpt"), "user_id", "ts"
         )
         kd = spark.read.parquet(state).distinct()
-        rows = user_growth(
+        return user_growth(
             kd.select(F.col("key").alias("user_id"), F.col("day").alias("ts")),
             "user_id",
             "ts",
-        ).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "day date, active_users long, new_users long, cum_users long"
-    )
+        ).localCheckpoint(eager=True)
 
 
 def q_stream_rolling_quantiles(spark, sf_dir):
@@ -951,10 +773,6 @@ def q_stream_rolling_quantiles(spark, sf_dir):
     rolling_quantiles_from_daily and must reproduce the one-shot batch
     curve (q_rolling_quantiles' oracle VERBATIM, disjoint event_id
     slices)."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.functions.sketch import (
         rolling_quantiles_from_daily,
     )
@@ -966,19 +784,8 @@ def q_stream_rolling_quantiles(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_rq_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, ts timestamp,"
-                " value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_rq_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         width = 512.0 / 256
         bin_ = F.least(
@@ -988,7 +795,7 @@ def q_stream_rolling_quantiles(spark, sf_dir):
             ),
         ).cast("int")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["key", "__d", "bin"],
@@ -1001,14 +808,9 @@ def q_stream_rolling_quantiles(spark, sf_dir):
         daily = read_summed_counts(spark, state, ["key", "__d", "bin"]).select(
             "key", "__d", "bin", F.col("n").alias("cnt")
         )
-        rows = rolling_quantiles_from_daily(
+        return rolling_quantiles_from_daily(
             daily, [0.5, 0.95], 0.0, 512.0, 256, 7
-        ).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "key string, day date, q double, est double, n_total long"
-    )
+        ).localCheckpoint(eager=True)
 
 
 def q_stream_fano(spark, sf_dir):
@@ -1017,10 +819,6 @@ def q_stream_fano(spark, sf_dir):
     additive face maintains it with zero new fold code; summed state
     feeds fano_from_daily and must equal the one-shot batch detector
     (q_fano's oracle VERBATIM, disjoint event_id slices)."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.operators.analytics import fano_from_daily
     from salesforce_plugin_spark.streaming.upsert import (
         read_summed_counts,
@@ -1028,21 +826,11 @@ def q_stream_fano(spark, sf_dir):
     )
 
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    tmp = tempfile.mkdtemp(prefix="conf_stream_fano_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_fano_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["user_id", "__d"],
@@ -1053,12 +841,7 @@ def q_stream_fano(spark, sf_dir):
         daily = read_summed_counts(spark, state, ["user_id", "__d"]).select(
             "user_id", "__d", F.col("n").alias("__c")
         )
-        rows = fano_from_daily(daily, ["user_id"]).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "user_id long, n_days long, total long, fano_x1000 long"
-    )
+        return fano_from_daily(daily, ["user_id"]).localCheckpoint(eager=True)
 
 
 def q_stream_dow(spark, sf_dir):
@@ -1067,10 +850,6 @@ def q_stream_dow(spark, sf_dir):
     additive face maintains them with zero new fold code; summed state
     feeds dow_profile_from_counts and must equal the one-shot batch
     profile (q_dow_profile's oracle VERBATIM, disjoint slices)."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.operators.timeseries import (
         dow_profile_from_counts,
     )
@@ -1082,21 +861,11 @@ def q_stream_dow(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_dow_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_dow_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["event_type", "__sundow"],
@@ -1107,12 +876,9 @@ def q_stream_dow(spark, sf_dir):
         counts = read_summed_counts(
             spark, state, ["event_type", "__sundow"]
         )
-        rows = dow_profile_from_counts(counts, ["event_type"]).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, dow int, n long, share_ppm long"
-    )
+        return dow_profile_from_counts(counts, ["event_type"]).localCheckpoint(
+            eager=True
+        )
 
 
 
@@ -1122,10 +888,6 @@ def q_stream_theil_sen(spark, sf_dir):
     maintains them with zero new fold code; summed state feeds
     theil_sen_from_daily and must equal the one-shot batch trend
     (q_theil_sen's oracle VERBATIM, disjoint slices)."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.operators.analytics import (
         theil_sen_from_daily,
     )
@@ -1137,21 +899,11 @@ def q_stream_theil_sen(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_ts_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_ts_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["__k", "__d"],
@@ -1165,12 +917,9 @@ def q_stream_theil_sen(spark, sf_dir):
         daily = read_summed_counts(spark, state, ["__k", "__d"]).select(
             "__k", "__d", F.col("n").alias("__c")
         )
-        rows = theil_sen_from_daily(daily, "event_type").collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_days long, n_pairs long, slope_ppm long"
-    )
+        return theil_sen_from_daily(daily, "event_type").localCheckpoint(
+            eager=True
+        )
 
 
 def q_stream_temperature_mix(spark, sf_dir):
@@ -1181,10 +930,6 @@ def q_stream_temperature_mix(spark, sf_dir):
     zero new fold code; summed state feeds temperature_mix_from_counts
     and must equal the one-shot batch mix (q_temperature_mix's oracle
     VERBATIM, disjoint slices)."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.functions.text import tokens
     from salesforce_plugin_spark.operators.pipeline import (
         temperature_mix_from_counts,
@@ -1197,21 +942,11 @@ def q_stream_temperature_mix(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_tm_")
-    try:
-        src = _slice_to_files(
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, lang string, text string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [d.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_tm_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["lang", "__kind"],
@@ -1236,14 +971,9 @@ def q_stream_temperature_mix(spark, sf_dir):
             .cast("long")
             .alias("n_tokens"),
         )
-        rows = temperature_mix_from_counts(per, "lang", tau=2).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "lang string, n_docs long, n_tokens long, w long,"
-        " share_ppm long, boost_ppm long",
-    )
+        return temperature_mix_from_counts(per, "lang", tau=2).localCheckpoint(
+            eager=True
+        )
 
 
 ORACLES: dict[str, str] = {}
@@ -1332,10 +1062,6 @@ def q_stream_hll(spark, sf_dir):
     estimate. Max-merged state feeds hll_estimate_from_registers and
     must equal the one-shot batch estimate (q_hll's oracle VERBATIM) —
     which also means equal to a run that never saw the duplicate."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.functions.sketch import (
         hll_estimate_from_registers,
     )
@@ -1347,21 +1073,12 @@ def q_stream_hll(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_hll_")
-    try:
-        slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
-        slices.append(e.filter(F.col("event_id") % 3 == 0))  # replay
-        src = _slice_to_files(slices, tmp)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, user_id long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    slices.append(e.filter(F.col("event_id") % 3 == 0))  # replay
+    with _staged_stream(spark, slices, "conf_stream_hll_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_max_registers(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["event_type"],
@@ -1374,7 +1091,7 @@ def q_stream_hll(spark, sf_dir):
             .cast("long")
             .alias("true_distinct")
         )
-        rows = (
+        return (
             exact.join(est, "event_type")
             .select(
                 "event_type",
@@ -1384,14 +1101,8 @@ def q_stream_hll(spark, sf_dir):
                 .cast("long")
                 .alias("err"),
             )
-            .collect()
+            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "event_type string, true_distinct long, est_distinct long, err long",
-    )
 
 
 def q_stream_wilson(spark, sf_dir):
@@ -1402,10 +1113,6 @@ def q_stream_wilson(spark, sf_dir):
     cell); summed state feeds wilson_from_counts and must equal the
     one-shot batch bound (q_wilson's oracle VERBATIM, disjoint
     slices). 16th equivalence face."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.functions.text import token_count
     from salesforce_plugin_spark.operators.analytics import (
         wilson_from_counts,
@@ -1418,21 +1125,11 @@ def q_stream_wilson(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_wilson_")
-    try:
-        src = _slice_to_files(
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, source string, text string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [d.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_wilson_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["source", "__ok"],
@@ -1446,13 +1143,7 @@ def q_stream_wilson(spark, sf_dir):
             F.sum("n").cast("long").alias("n"),
             F.sum(F.col("n") * F.col("__ok")).cast("long").alias("s"),
         )
-        rows = wilson_from_counts(agg, ["source"]).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "source string, n long, s long, rate_ppm long, wilson_lb_ppm long",
-    )
+        return wilson_from_counts(agg, ["source"]).localCheckpoint(eager=True)
 
 
 def q_stream_abtest(spark, sf_dir):
@@ -1463,10 +1154,6 @@ def q_stream_abtest(spark, sf_dir):
     batch read-out (q_abtest's oracle VERBATIM, disjoint slices) —
     the live experiment monitor whose artifact can't drift from the
     offline analysis. 17th equivalence face."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.operators.analytics import ab_from_counts
     from salesforce_plugin_spark.streaming.upsert import (
         read_summed_counts,
@@ -1476,22 +1163,11 @@ def q_stream_abtest(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_ab_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, user_id long,"
-                " value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_ab_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["event_type", "__arm", "__ok"],
@@ -1526,15 +1202,7 @@ def q_stream_abtest(spark, sf_dir):
             .cast("long")
             .alias("s2"),
         )
-        rows = ab_from_counts(agg, ["event_type"]).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "event_type string, n1 long, s1 long, n2 long, s2 long,"
-        " p1_ppm long, p2_ppm long, diff_ppm long, z_milli long,"
-        " significant int",
-    )
+        return ab_from_counts(agg, ["event_type"]).localCheckpoint(eager=True)
 
 
 def q_stream_calibration(spark, sf_dir):
@@ -1545,10 +1213,6 @@ def q_stream_calibration(spark, sf_dir):
     state reduces to the exact mean-score/rate surface and must equal
     the one-shot batch curve (q_calibration's oracle VERBATIM,
     disjoint slices). 18th equivalence face."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.streaming.upsert import (
         read_summed_sums,
         run_stream_additive_sums,
@@ -1557,18 +1221,8 @@ def q_stream_calibration(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_cal_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_cal_") as (stream, tmp):
         state = os.path.join(tmp, "state")
 
         def prep(b):
@@ -1589,7 +1243,7 @@ def q_stream_calibration(spark, sf_dir):
             )
 
         run_stream_additive_sums(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["bin"],
@@ -1602,7 +1256,7 @@ def q_stream_calibration(spark, sf_dir):
         # dfloor, NOT decimal `div` — Spark's div mis-handles decimal
         # operands (the exactmath.py discovery); the exact-multiple
         # identity is the safe floor
-        rows = merged.select(
+        return merged.select(
             "bin",
             "n",
             F.expr(
@@ -1611,12 +1265,7 @@ def q_stream_calibration(spark, sf_dir):
             F.expr(
                 dfloor(f"{dcast('sum_ok')} * 1000000", dcast("n"))
             ).alias("rate_ppm"),
-        ).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "bin int, n long, mean_score_milli long, rate_ppm long"
-    )
+        ).localCheckpoint(eager=True)
 
 
 def q_stream_zscore(spark, sf_dir):
@@ -1631,10 +1280,6 @@ def q_stream_zscore(spark, sf_dir):
     19th equivalence face — the first that joins streamed state back
     over a batch scan (stats live, data at rest: the standard
     monitoring-service split)."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.operators.analytics import zscore_from_stats
     from salesforce_plugin_spark.streaming.upsert import (
         read_summed_sums,
@@ -1644,18 +1289,8 @@ def q_stream_zscore(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_z_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_z_") as (stream, tmp):
         state = os.path.join(tmp, "state")
 
         def prep(b):
@@ -1665,21 +1300,16 @@ def q_stream_zscore(spark, sf_dir):
             )
 
         run_stream_additive_sums(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["event_type"],
             sum_cols=["qv", "qv2"],
             prepare=prep,
         )
-        stats_rows = read_summed_sums(
+        stats = read_summed_sums(
             spark, state, ["event_type"], ["qv", "qv2"]
-        ).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    stats = spark.createDataFrame(
-        stats_rows, "event_type string, n long, sum_qv long, sum_qv2 long"
-    )
+        ).localCheckpoint(eager=True)
     return zscore_from_stats(
         e,
         "value",
@@ -1704,10 +1334,6 @@ def q_stream_kanonymity(spark, sf_dir):
     one-shot batch audit (q_kanonymity's oracle VERBATIM). 20th
     equivalence face — the first composing two state kinds in one
     result."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.streaming.upsert import (
         read_distinct_set,
         read_summed_counts,
@@ -1718,21 +1344,8 @@ def q_stream_kanonymity(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_kanon_")
-    try:
-        src = _slice_to_files(
-            [c.filter(F.col("c_custkey") % 3 == i) for i in range(3)], tmp
-        )
-
-        def mkstream():
-            return (
-                spark.readStream.schema(
-                    "c_custkey long, c_nationkey long,"
-                    " c_mktsegment string, c_acctbal double"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
+    slices = [c.filter(F.col("c_custkey") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_kanon_") as (stream, tmp):
 
         def prep(b):
             return b.select(
@@ -1746,14 +1359,14 @@ def q_stream_kanonymity(spark, sf_dir):
         k_state = os.path.join(tmp, "k_state")
         l_state = os.path.join(tmp, "l_state")
         run_stream_additive_counts(
-            mkstream(),
+            stream(),
             k_state,
             os.path.join(tmp, "ckpt_k"),
             group_cols=["c_nationkey", "c_mktsegment"],
             prepare=prep,
         )
         run_stream_distinct_set(
-            mkstream(),
+            stream(),
             l_state,
             os.path.join(tmp, "ckpt_l"),
             cols=["c_nationkey", "c_mktsegment", "bal_band"],
@@ -1769,18 +1382,11 @@ def q_stream_kanonymity(spark, sf_dir):
             .groupBy("c_nationkey", "c_mktsegment")
             .agg(F.count(F.lit(1)).cast("long").alias("l"))
         )
-        rows = (
+        return (
             k.join(l_, ["c_nationkey", "c_mktsegment"])
             .withColumn("at_risk", F.col("k") < 5)
-            .collect()
+            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "c_nationkey long, c_mktsegment string, k long, l long,"
-        " at_risk boolean",
-    )
 
 
 def q_stream_changepoint(spark, sf_dir):
@@ -1793,10 +1399,6 @@ def q_stream_changepoint(spark, sf_dir):
     VERBATIM, disjoint slices). 21st equivalence face — the monitor
     that re-answers "where did the level shift?" after every
     micro-batch without re-scanning history."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.operators.timeseries import (
         changepoint_from_daily,
     )
@@ -1808,18 +1410,8 @@ def q_stream_changepoint(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_cp_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_cp_") as (stream, tmp):
         state = os.path.join(tmp, "state")
 
         def prep(b):
@@ -1828,7 +1420,7 @@ def q_stream_changepoint(spark, sf_dir):
             )
 
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["event_type", "__d"],
@@ -1837,14 +1429,9 @@ def q_stream_changepoint(spark, sf_dir):
         daily = read_summed_counts(
             spark, state, ["event_type", "__d"]
         ).select("event_type", "__d", F.col("n").alias("__c"))
-        rows = changepoint_from_daily(daily, ["event_type"]).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "event_type string, split_day string, n_left long, n_right long,"
-        " mean_left_milli long, mean_right_milli long, gain_milli long",
-    )
+        return changepoint_from_daily(daily, ["event_type"]).localCheckpoint(
+            eager=True
+        )
 
 
 def q_stream_ks(spark, sf_dir):
@@ -1856,10 +1443,6 @@ def q_stream_ks(spark, sf_dir):
     test (q_ks_test's oracle VERBATIM, disjoint slices). 22nd
     equivalence face — the live reference-vs-production distribution
     monitor that cannot drift from the offline analysis."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.functions.sketch import ks_from_counts
     from salesforce_plugin_spark.streaming.upsert import (
         read_summed_sums,
@@ -1869,18 +1452,8 @@ def q_stream_ks(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_ks_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_ks_") as (stream, tmp):
         state = os.path.join(tmp, "state")
 
         def prep(b):
@@ -1895,7 +1468,7 @@ def q_stream_ks(spark, sf_dir):
             )
 
         run_stream_additive_sums(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["qv"],
@@ -1907,12 +1480,7 @@ def q_stream_ks(spark, sf_dir):
             F.col("sum_ca").alias("ca"),
             F.col("sum_cb").alias("cb"),
         )
-        rows = ks_from_counts(g).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "n1 long, n2 long, d_num long, d_ppm long, at_qv long"
-    )
+        return ks_from_counts(g).localCheckpoint(eager=True)
 
 
 def q_stream_benford(spark, sf_dir):
@@ -1923,10 +1491,6 @@ def q_stream_benford(spark, sf_dir):
     q_benford (oracle VERBATIM, disjoint slices). 23rd equivalence
     face — the fabricated-data monitor a live ingestion pipeline runs
     per batch without re-scanning history."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.operators.validate import (
         benford_from_counts,
     )
@@ -1938,18 +1502,8 @@ def q_stream_benford(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_benford_")
-    try:
-        src = _slice_to_files(
-            [o.filter(F.col("o_orderkey") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "o_orderkey long, o_totalprice double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [o.filter(F.col("o_orderkey") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_benford_") as (stream, tmp):
         state = os.path.join(tmp, "state")
 
         def prep(b):
@@ -1961,20 +1515,14 @@ def q_stream_benford(spark, sf_dir):
             )
 
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["digit"],
             prepare=prep,
         )
         counts = read_summed_counts(spark, state, ["digit"])
-        rows = benford_from_counts(counts).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "digit int, n long, obs_ppm long, exp_ppm long, dev_ppm long",
-    )
+        return benford_from_counts(counts).localCheckpoint(eager=True)
 
 
 def q_stream_itemcf(spark, sf_dir):
@@ -1986,10 +1534,6 @@ def q_stream_itemcf(spark, sf_dir):
     min_support floor applied on MERGED totals at read-out (a 1+1 pair
     is support 2). item_similarity_from_counts == the one-shot batch
     q_itemcf (oracle VERBATIM). 24th equivalence face."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.operators.analytics import (
         copurchase_pairs,
         item_similarity_from_counts,
@@ -2004,23 +1548,13 @@ def q_stream_itemcf(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_itemcf_")
-    try:
-        src = _slice_to_files(
-            [li.filter(F.col("l_orderkey") % 3 == i) for i in range(3)], tmp
-        )
-
-        def mkstream():
-            return (
-                spark.readStream.schema("l_orderkey long, l_partkey long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
+    slices = [li.filter(F.col("l_orderkey") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_itemcf_") as (stream, tmp):
 
         pair_state = os.path.join(tmp, "pairs")
         item_state = os.path.join(tmp, "items")
         run_stream_additive_sums(
-            mkstream(),
+            stream(),
             pair_state,
             os.path.join(tmp, "ckpt_p"),
             group_cols=["item_a", "item_b"],
@@ -2033,7 +1567,7 @@ def q_stream_itemcf(spark, sf_dir):
             ),
         )
         run_stream_additive_counts(
-            mkstream(),
+            stream(),
             item_state,
             os.path.join(tmp, "ckpt_i"),
             group_cols=["item"],
@@ -2048,15 +1582,9 @@ def q_stream_itemcf(spark, sf_dir):
         counts = read_summed_counts(spark, item_state, ["item"]).select(
             "item", F.col("n").alias("c")
         )
-        rows = item_similarity_from_counts(
+        return item_similarity_from_counts(
             pairs, counts, min_support=2, top_k=5
-        ).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "item long, neighbor long, support long, cos_ppm long, rank int",
-    )
+        ).localCheckpoint(eager=True)
 
 
 def q_stream_gram_power(spark, sf_dir):
@@ -2071,10 +1599,6 @@ def q_stream_gram_power(spark, sf_dir):
     micro-batch and answer power steps without rescanning the corpus.
     State is dims²-bounded (256 cells at 16 dims) regardless of
     volume."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.streaming.upsert import (
         read_summed_sums,
         run_stream_additive_sums,
@@ -2083,18 +1607,8 @@ def q_stream_gram_power(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_gram_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("vec_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "vec_id long, embedding array<float>"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("vec_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_gram_") as (stream, tmp):
         state = os.path.join(tmp, "state")
 
         def prep(b):
@@ -2118,7 +1632,7 @@ def q_stream_gram_power(spark, sf_dir):
             )
 
         run_stream_additive_sums(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["dim_i", "dim_j"],
@@ -2139,15 +1653,12 @@ def q_stream_gram_power(spark, sf_dir):
             (F.col("__p") + 1).cast("int").alias("dim_j"),
             F.col("__v").alias("v"),
         )
-        rows = (
+        return (
             gram.join(F.broadcast(v0), "dim_j")
             .groupBy(F.col("dim_i").alias("dim"))
             .agg(F.sum(F.col("s") * F.col("v")).cast("long").alias("gv"))
-            .collect()
+            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "dim int, gv long")
 
 
 def q_stream_autocorr(spark, sf_dir):
@@ -2157,10 +1668,6 @@ def q_stream_autocorr(spark, sf_dir):
     monitors (the point of factoring folds from read-outs), and each
     read-out equals its one-shot batch (q_autocorr's oracle VERBATIM).
     26th equivalence face."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.operators.analytics import (
         autocorr_from_daily,
     )
@@ -2172,21 +1679,11 @@ def q_stream_autocorr(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_ac_")
-    try:
-        src = _slice_to_files(
-            [e.filter(F.col("event_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_ac_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["event_type", "day"],
@@ -2197,12 +1694,9 @@ def q_stream_autocorr(spark, sf_dir):
         daily = read_summed_counts(
             spark, state, ["event_type", "day"]
         ).select(F.col("event_type").alias("__t"), "day", "n")
-        rows = autocorr_from_daily(daily, "event_type", max_lag=3).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, lag int, dot long, n_days long"
-    )
+        return autocorr_from_daily(daily, "event_type", max_lag=3).localCheckpoint(
+            eager=True
+        )
 
 
 def q_stream_kneser_ney(spark, sf_dir):
@@ -2215,10 +1709,6 @@ def q_stream_kneser_ney(spark, sf_dir):
     gate (its oracle VERBATIM). The face the live curation pipeline
     needs: the in-domain LM keeps absorbing new target documents
     while the scorer stays a pure reduction of the same state."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.functions.text import (
         bigram_rows,
         kn_score_from_counts,
@@ -2232,19 +1722,11 @@ def q_stream_kneser_ney(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    tmp = tempfile.mkdtemp(prefix="conf_stream_kn_")
-    try:
-        src = _slice_to_files(
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, lang string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [d.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_kn_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_counts(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["w1", "w2"],
@@ -2258,14 +1740,9 @@ def q_stream_kneser_ney(spark, sf_dir):
         big = bigram_rows(
             d.filter(F.size(tokens(F.col("text"))) >= 2), "doc_id", "text"
         )
-        rows = kn_score_from_counts(big, c12, "doc_id").collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, n_bigrams long, n_scored long, kn_bits_x8 long,"
-        " milli_bits_per_bigram long",
-    )
+        return kn_score_from_counts(big, c12, "doc_id").localCheckpoint(
+            eager=True
+        )
 
 
 def q_stream_repeated_spans(spark, sf_dir):
@@ -2277,10 +1754,6 @@ def q_stream_repeated_spans(spark, sf_dir):
     batch operator explodes; the read-out replays the batch op's
     flag → islands → content-hash tail over the summed state and must
     equal one-shot q_repeated_spans (its oracle VERBATIM)."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
     from salesforce_plugin_spark.functions.text import tokens
     from salesforce_plugin_spark.streaming.upsert import (
@@ -2290,16 +1763,8 @@ def q_stream_repeated_spans(spark, sf_dir):
 
     n_anchor = 8
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="conf_stream_spans_")
-    try:
-        src = _slice_to_files(
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [d.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_spans_") as (stream, tmp):
         state = os.path.join(tmp, "state")
 
         def occ_rows(b):
@@ -2334,7 +1799,7 @@ def q_stream_repeated_spans(spark, sf_dir):
             )
 
         run_stream_distinct_set(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             cols=["doc_id", "spos", "key"],
@@ -2359,7 +1824,7 @@ def q_stream_repeated_spans(spark, sf_dir):
             .drop("__grp")
         )
         toked = d.select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
-        rows = (
+        return (
             runs.join(toked, "doc_id")
             .select(
                 F.col("doc_id"),
@@ -2376,13 +1841,8 @@ def q_stream_repeated_spans(spark, sf_dir):
                     ).cast("binary")
                 ).alias("span_md5"),
             )
-            .collect()
+            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "doc_id long, span_start int, span_tokens int, span_md5 string"
-    )
 
 
 def q_stream_distill(spark, sf_dir):
@@ -2397,10 +1857,6 @@ def q_stream_distill(spark, sf_dir):
     oracle VERBATIM). The face a live curation pipeline needs: the
     student keeps refitting as teacher labels stream in, scoring stays
     a pure reduction of the summed state."""
-    import os
-    import shutil
-    import tempfile
-
     from salesforce_plugin_spark.functions.ir import (
         _solve_student,
         apply_student,
@@ -2412,20 +1868,12 @@ def q_stream_distill(spark, sf_dir):
     )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="conf_stream_distill_")
     sums = ["x1", "x2", "y", "x1x1", "x2x2", "x1x2", "x1y", "x2y"]
-    try:
-        src = _slice_to_files(
-            [d.filter(F.col("doc_id") % 3 == i) for i in range(3)], tmp
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    slices = [d.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    with _staged_stream(spark, slices, "conf_stream_distill_") as (stream, tmp):
         state = os.path.join(tmp, "state")
         run_stream_additive_sums(
-            stream,
+            stream(),
             state,
             os.path.join(tmp, "ckpt"),
             group_cols=["g"],
@@ -2447,11 +1895,6 @@ def q_stream_distill(spark, sf_dir):
             }
         )
         w = _solve_student(m)
-        rows = apply_student(d, "doc_id", "text", w, sample_mod=4).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, n_tokens long, n_stop long, teacher_scaled long,"
-        " student_score double",
-    )
+        return apply_student(d, "doc_id", "text", w, sample_mod=4).localCheckpoint(
+            eager=True
+        )

@@ -1098,6 +1098,43 @@ def ann_recall(
     )
 
 
+def _sign_pattern(v, sign_bits: int):
+    """The ``sign_bits``-bit sign pattern of the array column ``v``: bit
+    ``i`` is set when coordinate ``i`` is >= 0. Size-guarded (ANSI
+    element_at errors past the array length), so short vectors
+    contribute 0 bits."""
+    return sum(
+        (
+            F.when(
+                (F.size(v) > i) & (F.element_at(v, i + 1) >= 0),
+                F.lit(1 << i).cast("long"),
+            ).otherwise(F.lit(0).cast("long"))
+            for i in range(sign_bits)
+        ),
+        F.lit(0).cast("long"),
+    )
+
+
+def _bucket_bits(target: int, sign_bits: int):
+    """Adaptive sign-LSH bucket width over a row count column ``__cnt``:
+    ``msb(__cnt div target)`` bits (pure integer bit arithmetic, the
+    length_buckets idiom, no float log2), capped at ``sign_bits``, so a
+    bucket holds ~``target`` rows."""
+    return F.least(
+        F.lit(sign_bits),
+        (
+            F.length(
+                F.bin(
+                    F.greatest(
+                        F.lit(1).cast("long"), F.expr(f"__cnt div {target}")
+                    )
+                )
+            )
+            - 1
+        ).cast("int"),
+    )
+
+
 def mutual_nn(
     df: DataFrame,
     id_col: str,
@@ -1140,37 +1177,10 @@ def mutual_nn(
     counts = base0.groupBy("__blk0").agg(
         F.count(F.lit(1)).alias("__cnt")
     )
-    bits = F.least(
-        F.lit(sign_bits),
-        (
-            F.length(
-                F.bin(
-                    F.greatest(
-                        F.lit(1).cast("long"),
-                        F.expr(f"__cnt div {target_block}"),
-                    )
-                )
-            )
-            - 1
-        ).cast("int"),
-    )
-    # size-guarded sign pattern (ANSI element_at errors past the array
-    # length; short dims contribute 0 bits)
-    pattern = sum(
-        (
-            F.when(
-                (F.size(F.col("__v")) > i)
-                & (F.element_at(F.col("__v"), i + 1) >= 0),
-                F.lit(1 << i).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-            for i in range(sign_bits)
-        ),
-        F.lit(0).cast("long"),
-    )
     base = (
         base0.join(counts, "__blk0")
-        .withColumn("__bits", bits)
-        .withColumn("__pat", pattern)
+        .withColumn("__bits", _bucket_bits(target_block, sign_bits))
+        .withColumn("__pat", _sign_pattern(F.col("__v"), sign_bits))
         .select(
             F.concat_ws(
                 "#",
@@ -1593,40 +1603,14 @@ def _dbscan_close(
     SCALE.md round-7)."""
     qz = quantize(F.col(vec_col), quant)
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    pattern = sum(
-        (
-            F.when(
-                (F.size(dv) > i) & (F.element_at(dv, i + 1) >= 0),
-                F.lit(1 << i).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-            for i in range(sign_bits)
-        ),
-        F.lit(0).cast("long"),
-    )
     cnt = df.agg(F.count(F.lit(1)).cast("long").alias("__cnt"))
     base = (
         df.crossJoin(F.broadcast(cnt))
-        .withColumn(
-            "__bits",
-            F.least(
-                F.lit(sign_bits),
-                (
-                    F.length(
-                        F.bin(
-                            F.greatest(
-                                F.lit(1).cast("long"),
-                                F.expr(f"__cnt div {target_bucket}"),
-                            )
-                        )
-                    )
-                    - 1
-                ).cast("int"),
-            ),
-        )
+        .withColumn("__bits", _bucket_bits(target_bucket, sign_bits))
         .select(
             F.col(id_col).alias("__id"),
             qz.alias("__q"),
-            pattern.alias("__pat"),
+            _sign_pattern(dv, sign_bits).alias("__pat"),
             F.col("__bits"),
         )
         .withColumn(

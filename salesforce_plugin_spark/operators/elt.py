@@ -100,6 +100,11 @@ class ObjectExtract:
 
     def build(self, spark: SparkSession) -> DataFrame:
         """The lazy plan for stages 3-7 of the reference lifecycle."""
+        return lowercase_columns(drop_attributes(self._scan(spark)))
+
+    def _scan(self, spark: SparkSession) -> DataFrame:
+        """The extracted rows before C2 / B9 column normalization, which
+        every sink applies itself."""
         resolve = self.resolve or _default_resolver(spark)
         if self.query:
             df = plans.soql_to_df(spark, self.query, resolve=resolve)
@@ -109,10 +114,10 @@ class ObjectExtract:
                 df = df.select(*[f.lower() for f in self.fields])
         if self.relationship_object:
             df = flatten_relationship(df, self.relationship_object)
-        return lowercase_columns(drop_attributes(df))
+        return df
 
     def execute(self, spark: SparkSession) -> None:
-        df = self.build(spark)
+        df = self._scan(spark)
         writer = {
             "csv": sinks.write_csv,
             "ndjson": sinks.write_ndjson,

@@ -65,8 +65,11 @@ def nest_children(
 
 def drop_attributes(df: DataFrame, meta_cols: tuple[str, ...] = ("attributes",)) -> DataFrame:
     """C2: drop per-record metadata columns (contrib ``write_object_to_file``;
-    call site ``salesforce_to_s3_operator.py:208-212``)."""
-    return df.drop(*[c for c in meta_cols if c in df.columns])
+    call site ``salesforce_to_s3_operator.py:208-212``). Returns ``df``
+    itself when none is present, as ``df.drop()`` would build and analyze
+    a new Dataset."""
+    present = [c for c in meta_cols if c in df.columns]
+    return df.drop(*present) if present else df
 
 
 def coerce_to_epoch_seconds(df: DataFrame, temporal_cols: list[str] | None = None) -> DataFrame:

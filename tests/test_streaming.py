@@ -613,3 +613,58 @@ def test_upsert_unresolvable_batch_schema_raises_and_keeps_rows(spark, tmp_path)
         upsert_batch(table, batch, ["id"], "v", "day")
     got = {r.id: r.v for r in spark.read.parquet(table).collect()}
     assert got == {1: "a", 2: "b"}
+
+
+def _three_slices(spark):
+    return [
+        spark.createDataFrame(
+            [(i * 10 + j, f"s{i}", [float(j)]) for j in range(3)],
+            "id long, tag string, v array<float>",
+        )
+        for i in range(3)
+    ]
+
+
+def test_staged_stream_drains_slices_as_ordered_batches(spark):
+    """A fold over a three-slice staged stream sees three micro-batches,
+    slice ``i`` as batch ``i``."""
+    import os
+
+    from salesforce_plugin_spark.conformance.streaming import _staged_stream
+
+    slices = _three_slices(spark)
+    seen = []
+    with _staged_stream(spark, slices, "test_staged_") as (stream, tmp):
+        stream().writeStream.foreachBatch(
+            lambda b, bid: seen.append((bid, sorted(r.id for r in b.collect())))
+        ).option("checkpointLocation", os.path.join(tmp, "ckpt")).trigger(
+            availableNow=True
+        ).start().awaitTermination()
+    assert seen == [
+        (i, sorted(r.id for r in sl.collect())) for i, sl in enumerate(slices)
+    ]
+
+
+def test_staged_stream_has_the_slices_schema(spark):
+    from salesforce_plugin_spark.conformance.streaming import _staged_stream
+
+    slices = _three_slices(spark)
+    with _staged_stream(spark, slices, "test_staged_") as (stream, _):
+        s = stream()
+        assert s.isStreaming
+        assert s.schema.simpleString() == slices[0].schema.simpleString()
+
+
+def test_staged_stream_removes_its_dir_on_success_and_error(spark):
+    import os
+
+    from salesforce_plugin_spark.conformance.streaming import _staged_stream
+
+    slices = _three_slices(spark)
+    with _staged_stream(spark, slices, "test_staged_") as (_, tmp):
+        assert len(os.listdir(os.path.join(tmp, "src"))) == 3
+    assert not os.path.exists(tmp)
+    with pytest.raises(RuntimeError, match="fold failed"):
+        with _staged_stream(spark, slices, "test_staged_") as (_, tmp):
+            raise RuntimeError("fold failed")
+    assert not os.path.exists(tmp)
