@@ -7,12 +7,34 @@ query builders and oracle SQL. The ordered public registry lives in
 
 from __future__ import annotations
 
+import numpy as np
+
 from salesforce_plugin_spark.conformance._common import *  # noqa: F401,F403
 
 
 # ---------------------------------------------------------------------------
 # F4: multimodal column plumbing (Arrow-batched pandas path)
 # ---------------------------------------------------------------------------
+
+def _doc_payloads(spark, sf_dir, min_octets=0, encode=None):
+    """The documents as ``(doc_id, payload)`` rows, those shorter than
+    ``min_octets`` UTF-8 bytes left out. The payload is the text's bytes,
+    or, given ``encode(doc_id, octets) -> payload``, a real media file
+    made of them inside an Arrow stage."""
+    from salesforce_plugin_spark.functions.multimodal import _payload_stage
+
+    docs = load_table(spark, sf_dir, "documents")
+    if min_octets:
+        docs = docs.filter(F.octet_length("text") >= min_octets)
+    if encode is None:
+        return parallelized(
+            docs.select("doc_id", F.col("text").cast("binary").alias("payload"))
+        )
+    return _payload_stage(
+        parallelized(docs.select("doc_id", "text")), "doc_id", "text",
+        "doc_id long, payload binary", lambda i, b: ([encode(i, b)],),
+    )
+
 
 def q_multimodal_bytes(spark, sf_dir):
     """F4: opaque-binary payload pipeline over mapInPandas — the decode step
@@ -21,12 +43,7 @@ def q_multimodal_bytes(spark, sf_dir):
     Arrow batching, UDF signature) is the real deliverable."""
     from salesforce_plugin_spark.functions.multimodal import payload_stats
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.col("text").cast("binary").alias("payload")
-        )
-    )
-    return payload_stats(d, "doc_id", "payload")
+    return payload_stats(_doc_payloads(spark, sf_dir), "doc_id", "payload")
 
 
 def q_json_extract(spark, sf_dir):
@@ -58,12 +75,9 @@ def q_multimodal_histogram(spark, sf_dir):
     parsing and bins them identically."""
     from salesforce_plugin_spark.functions.multimodal import byte_histogram
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.col("text").cast("binary").alias("payload")
-        )
+    return byte_histogram(
+        _doc_payloads(spark, sf_dir), "doc_id", "payload", n_bins=16
     )
-    return byte_histogram(d, "doc_id", "payload", n_bins=16)
 
 
 def q_event_window(spark, sf_dir):
@@ -135,17 +149,12 @@ def q_multimodal_frames(spark, sf_dir):
     md5+length per sampled frame, byte-for-byte replayable in SQL."""
     from salesforce_plugin_spark.functions.multimodal import frame_sample_plan
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.col("text").cast("binary").alias("payload")
-        )
-    )
-
     def fake_decoder(payload: bytes) -> list[bytes]:
         return [payload[i : i + 16] for i in range(0, len(payload), 16)]
 
     frames = frame_sample_plan(
-        d, "doc_id", "payload", every_nth=4, decoder=fake_decoder
+        _doc_payloads(spark, sf_dir), "doc_id", "payload", every_nth=4,
+        decoder=fake_decoder,
     )
     return frames.select(
         "doc_id",
@@ -167,13 +176,9 @@ def q_multimodal_channels(spark, sf_dir):
         channel_stats_plan,
     )
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.col("text").cast("binary").alias("payload")
-        )
-    )
     return channel_stats_plan(
-        d, "doc_id", "payload", n_channels=4, decoder=lambda b: b
+        _doc_payloads(spark, sf_dir), "doc_id", "payload", n_channels=4,
+        decoder=lambda b: b,
     )
 
 
@@ -284,12 +289,9 @@ def q_multimodal_ahash(spark, sf_dir):
         perceptual_ahash_pairs,
     )
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.col("text").cast("binary").alias("payload")
-        )
+    return perceptual_ahash_pairs(
+        _doc_payloads(spark, sf_dir), "doc_id", "payload", n_segs=16
     )
-    return perceptual_ahash_pairs(d, "doc_id", "payload", n_segs=16)
 
 
 def _ahash_oracle(n_segs: int = 16) -> str:
@@ -348,29 +350,14 @@ def _bmp_payloads(spark, sf_dir):
     oracles replay pixel statistics straight off the source text bytes
     — the gate proves the decoder really ran (headers, BGR order,
     bottom-up rows, and row padding all had to be undone to match)."""
-    d = parallelized(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.octet_length("text") >= 12)
-        .select("doc_id", "text")
+    from salesforce_plugin_spark.functions.multimodal import encode_bmp
+
+    return _doc_payloads(
+        spark, sf_dir, 12,
+        lambda _, b: encode_bmp(
+            np.frombuffer(b, np.uint8)[: len(b) // 12 * 12].reshape(-1, 4, 3)
+        ),
     )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from salesforce_plugin_spark.functions.multimodal import encode_bmp
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                h = len(b) // 12
-                payloads.append(encode_bmp(b[: h * 12].reshape(h, 4, 3)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return d.mapInPandas(enc, "doc_id long, payload binary")
 
 
 def _png_payloads(spark, sf_dir):
@@ -380,34 +367,13 @@ def _png_payloads(spark, sf_dir):
     (y % 5 → None/Sub/Up/Average/Paeth), so the byte-replay oracles
     only match if zlib inflate AND all five unfilter paths reproduce
     the source bytes exactly."""
-    d = parallelized(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.octet_length("text") >= 12)
-        .select("doc_id", "text")
-    )
+    from salesforce_plugin_spark.functions.multimodal import encode_png
 
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
+    def encode(_, b):
+        px = np.frombuffer(b, np.uint8)[: len(b) // 12 * 12].reshape(-1, 4, 3)
+        return encode_png(px, row_filters=[y % 5 for y in range(len(px))])
 
-        from salesforce_plugin_spark.functions.multimodal import encode_png
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                h = len(b) // 12
-                payloads.append(
-                    encode_png(
-                        b[: h * 12].reshape(h, 4, 3),
-                        row_filters=[y % 5 for y in range(h)],
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return d.mapInPandas(enc, "doc_id long, payload binary")
+    return _doc_payloads(spark, sf_dir, 12, encode)
 
 
 def q_png_histogram(spark, sf_dir):
@@ -440,44 +406,21 @@ def q_png_palette_histogram(spark, sf_dir):
     the PLTE lookup (and inflate + unfiltering on 1-byte-per-pixel
     scanlines) is exact."""
     from salesforce_plugin_spark.functions.multimodal import (
+        encode_png_palette,
         image_pixel_histogram,
     )
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.octet_length("text") >= 4)
-        .select("doc_id", "text")
+    ramp = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
+
+    def encode(_, b):
+        idx = np.frombuffer(b, np.uint8)[: len(b) // 4 * 4].reshape(-1, 4)
+        return encode_png_palette(
+            idx, ramp, row_filters=[y % 5 for y in range(len(idx))]
+        )
+
+    return image_pixel_histogram(
+        _doc_payloads(spark, sf_dir, 4, encode), "doc_id", "payload", n_bins=16
     )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from salesforce_plugin_spark.functions.multimodal import (
-            encode_png_palette,
-        )
-
-        ramp = np.repeat(
-            np.arange(256, dtype=np.uint8)[:, None], 3, axis=1
-        )
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                h = len(b) // 4
-                payloads.append(
-                    encode_png_palette(
-                        b[: h * 4].reshape(h, 4),
-                        ramp,
-                        row_filters=[y % 5 for y in range(h)],
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    pngs = d.mapInPandas(enc, "doc_id long, payload binary")
-    return image_pixel_histogram(pngs, "doc_id", "payload", n_bins=16)
 
 
 def q_png16_stats(spark, sf_dir):
@@ -493,40 +436,20 @@ def q_png16_stats(spark, sf_dir):
     only if deflate + unfiltering + the u16 lane reassembly are
     byte-exact."""
     from salesforce_plugin_spark.functions.multimodal import (
+        encode_png,
         image_sample_stats,
     )
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.octet_length("text") >= 8)
-        .select("doc_id", "text")
+    def encode(_, b):
+        h = len(b) // 8
+        px = np.frombuffer(b[: h * 8], dtype=">u2").astype(np.uint16)
+        return encode_png(
+            px.reshape(h, 4, 1), row_filters=[y % 5 for y in range(h)]
+        )
+
+    return image_sample_stats(
+        _doc_payloads(spark, sf_dir, 8, encode), "doc_id", "payload"
     )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from salesforce_plugin_spark.functions.multimodal import encode_png
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                b = t.encode("utf-8")
-                h = len(b) // 8
-                arr = (
-                    np.frombuffer(b[: h * 8], dtype=">u2")
-                    .astype(np.uint16)
-                    .reshape(h, 4, 1)
-                )
-                payloads.append(
-                    encode_png(arr, row_filters=[y % 5 for y in range(h)])
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    pngs = d.mapInPandas(enc, "doc_id long, payload binary")
-    return image_sample_stats(pngs, "doc_id", "payload")
 
 
 def q_png_adam7_histogram(spark, sf_dir):
@@ -539,48 +462,21 @@ def q_png_adam7_histogram(spark, sf_dir):
     pass unfilters independently and scatters back to the exact
     source grid."""
     from salesforce_plugin_spark.functions.multimodal import (
+        _adam7_scanlines,
+        encode_png,
         image_pixel_histogram,
     )
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.octet_length("text") >= 12)
-        .select("doc_id", "text")
-    )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from salesforce_plugin_spark.functions.multimodal import (
-            _ADAM7,
-            encode_png,
+    def encode(_, b):
+        px = np.frombuffer(b, np.uint8)[: len(b) // 12 * 12].reshape(-1, 4, 3)
+        rows = _adam7_scanlines(len(px), 4)
+        return encode_png(
+            px, interlace=True, row_filters=[i % 5 for i in range(rows)]
         )
 
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                h = len(b) // 12
-                rows = sum(
-                    (h - y0 + dy - 1) // dy
-                    for x0, y0, dx, dy in _ADAM7
-                    if (4 - x0 + dx - 1) // dx > 0
-                    and (h - y0 + dy - 1) // dy > 0
-                )
-                payloads.append(
-                    encode_png(
-                        b[: h * 12].reshape(h, 4, 3),
-                        interlace=True,
-                        row_filters=[i % 5 for i in range(rows)],
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    pngs = d.mapInPandas(enc, "doc_id long, payload binary")
-    return image_pixel_histogram(pngs, "doc_id", "payload", n_bins=16)
+    return image_pixel_histogram(
+        _doc_payloads(spark, sf_dir, 12, encode), "doc_id", "payload", n_bins=16
+    )
 
 
 def q_png_lowdepth_stats(spark, sf_dir):
@@ -599,61 +495,30 @@ def q_png_lowdepth_stats(spark, sf_dir):
     matches only if inflate + packed-byte unfiltering + big-endian bit
     regrouping (and the Adam7 scatter) are all sample-exact."""
     from salesforce_plugin_spark.functions.multimodal import (
+        _adam7_scanlines,
+        encode_png,
         image_sample_stats,
     )
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.octet_length("text") >= 4)
-        .select("doc_id", "text")
-    )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from salesforce_plugin_spark.functions.multimodal import (
-            _ADAM7,
-            encode_png,
+    def encode(doc_id, b):
+        depth = (1, 2, 4)[doc_id % 3]
+        per = 8 // depth  # samples per byte
+        shifts = np.arange(per - 1, -1, -1) * depth
+        octets = np.frombuffer(b, np.uint8)[: len(b) // 4 * 4]
+        samples = (octets[:, None] >> shifts) & ((1 << depth) - 1)
+        img = samples.astype(np.uint8).reshape(-1, 4 * per)
+        interlace = doc_id % 2 == 1
+        rows = _adam7_scanlines(*img.shape) if interlace else len(img)
+        return encode_png(
+            img,
+            depth=depth,
+            interlace=interlace,
+            row_filters=[i % 5 for i in range(rows)],
         )
 
-        for pdf in batches:
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                nb = (len(b) // 4) * 4
-                depth = {0: 1, 1: 2, 2: 4}[int(doc_id) % 3]
-                per = 8 // depth  # samples per byte
-                shifts = np.arange(per - 1, -1, -1) * depth
-                samples = (
-                    (b[:nb, None] >> shifts) & ((1 << depth) - 1)
-                ).astype(np.uint8)
-                h, w = nb // 4, 4 * per
-                img = samples.reshape(h, w)
-                interlace = int(doc_id) % 2 == 1
-                if interlace:
-                    rows = sum(
-                        (h - y0 + dy - 1) // dy
-                        for x0, y0, dx, dy in _ADAM7
-                        if (w - x0 + dx - 1) // dx > 0
-                        and (h - y0 + dy - 1) // dy > 0
-                    )
-                else:
-                    rows = h
-                payloads.append(
-                    encode_png(
-                        img,
-                        depth=depth,
-                        interlace=interlace,
-                        row_filters=[i % 5 for i in range(rows)],
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    pngs = d.mapInPandas(enc, "doc_id long, payload binary")
-    return image_sample_stats(pngs, "doc_id", "payload")
+    return image_sample_stats(
+        _doc_payloads(spark, sf_dir, 4, encode), "doc_id", "payload"
+    )
 
 
 def q_jpeg_gray_stats(spark, sf_dir):
@@ -671,35 +536,18 @@ def q_jpeg_gray_stats(spark, sf_dir):
     int64; the oracle replays 64 samples per source byte off the hex
     slices (64·Σ, 64·Σ², min, max)."""
     from salesforce_plugin_spark.functions.multimodal import (
+        encode_jpeg,
         image_sample_stats,
     )
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.octet_length("text") >= 4)
-        .select("doc_id", "text")
+    def encode(_, b):
+        # one byte per constant 8x8 block, 4 blocks per row
+        blocks = np.frombuffer(b, np.uint8)[: len(b) // 4 * 4].reshape(-1, 4)
+        return encode_jpeg(np.kron(blocks, np.ones((8, 8), dtype=np.uint8)))
+
+    return image_sample_stats(
+        _doc_payloads(spark, sf_dir, 4, encode), "doc_id", "payload"
     )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from salesforce_plugin_spark.functions.multimodal import encode_jpeg
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                nb = (len(b) // 4) * 4
-                blocks = b[:nb].reshape(-1, 4)  # one byte per 8x8 block
-                img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                payloads.append(encode_jpeg(img))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    jpegs = d.mapInPandas(enc, "doc_id long, payload binary")
-    return image_sample_stats(jpegs, "doc_id", "payload")
 
 
 def q_bmp_histogram(spark, sf_dir):
@@ -736,30 +584,13 @@ def q_wav_channels(spark, sf_dir):
         wav_channel_stats,
     )
 
-    d = parallelized(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.octet_length("text") >= 2)
-        .select("doc_id", "text")
+    def encode(_, b):
+        samples = np.frombuffer(b, np.uint8).astype(np.int16)
+        return encode_wav(16000, samples[: len(b) // 2 * 2].reshape(-1, 2))
+
+    return wav_channel_stats(
+        _doc_payloads(spark, sf_dir, 2, encode), "doc_id", "payload"
     )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(
-                    np.int16
-                )
-                n = (len(b) // 2) * 2
-                payloads.append(encode_wav(16000, b[:n].reshape(-1, 2)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    wavs = d.mapInPandas(enc, "doc_id long, payload binary")
-    return wav_channel_stats(wavs, "doc_id", "payload")
 
 
 def q_bmp_ahash(spark, sf_dir):

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Callable, Iterator
+from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -223,6 +224,17 @@ _ADAM7 = (  # (x0, y0, dx, dy) per pass — RFC 2083 §2.6 interlace grids
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
 )
+
+
+def _adam7_scanlines(h: int, w: int) -> int:
+    """Scanlines in the Adam7 stream of an ``h``×``w`` image: the rows of
+    its non-empty passes (the length :func:`encode_png` wants for
+    ``row_filters`` when ``interlace`` is set)."""
+    return sum(
+        (h - y0 + dy - 1) // dy
+        for x0, y0, dx, dy in _ADAM7
+        if (w - x0 + dx - 1) // dx > 0 and (h - y0 + dy - 1) // dy > 0
+    )
 
 
 def _png_unfilter(raw, h: int, stride: int, bpp: int) -> np.ndarray:
@@ -1266,25 +1278,66 @@ def decode_audio(payload: bytes, decoder: Callable[[bytes], object] | None = Non
     return decoder(payload)
 
 
-def payload_stats(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
-    """Deterministic per-payload stats via mapInPandas — the fake 'decode'
-    used to exercise the full Arrow-batched binary pipeline end to end."""
+#: The pandas dtype of each declared output type a payload stage builds as
+#: a numpy column; any other type (string, binary) is an object column.
+_STAGE_DTYPES = {"long": "int64", "integer": "int32"}
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _payload_stage(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    schema: T.StructType | str,
+    per_payload: Callable[[object, bytes], tuple],
+) -> DataFrame:
+    """The module's one Arrow stage: ``(id_col, payload_col)`` rows become
+    ``schema`` rows (a StructType or DDL string) through ``mapInPandas``.
+    ``per_payload(doc_id, octets)`` returns one payload's output columns
+    after the first, as equal-length sequences or numpy arrays, so a 1:N
+    explode stays vectorized; the first column repeats the doc id once
+    per row. A string payload column is read as its UTF-8 bytes, as
+    Spark's cast to binary reads it. Every batch's frame, an empty one
+    included, takes its dtypes from ``schema``."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    dtypes = [
+        np.dtype(_STAGE_DTYPES.get(f.dataType.typeName(), object))
+        for f in schema.fields
+    ]
+
+    def column(parts: list, dtype: np.dtype):
+        if dtype == object:
+            return list(chain.from_iterable(parts))
+        if not parts:
+            return np.empty(0, dtype)
+        return np.concatenate([np.asarray(p, dtype) for p in parts])
+
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = pdf[payload_col]
+            cols = [[] for _ in names]
+            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+                if isinstance(payload, str):
+                    payload = payload.encode("utf-8")
+                out = per_payload(doc_id, bytes(payload))
+                cols[0].append(np.full(len(out[0]), doc_id))
+                for col, values in zip(cols[1:], out):
+                    col.append(values)
             yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "byte_len": payloads.map(len).astype("int64"),
-                    "payload_md5": payloads.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                }
+                {n: column(c, dt) for n, c, dt in zip(names, cols, dtypes)}
             )
 
     return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        compute, STATS_SCHEMA
+        stage, schema
+    )
+
+
+def payload_stats(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
+    """Deterministic per-payload stats via mapInPandas — the fake 'decode'
+    used to exercise the full Arrow-batched binary pipeline end to end."""
+    return _payload_stage(
+        df, id_col, payload_col, STATS_SCHEMA,
+        lambda _, p: ([len(p)], [hashlib.md5(p).hexdigest()]),
     )
 
 
@@ -1310,39 +1363,13 @@ def _byte_histogram_kernel(
     (:func:`image_pixel_histogram`) — one implementation, so fixes to
     the binning/explode logic cannot diverge between them."""
     width = _check_n_bins(n_bins)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("bin", T.IntegerType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bins = np.arange(n_bins, dtype=np.int32)
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64").to_numpy()
-            if len(ids):
-                counts = np.vstack(
-                    [
-                        np.bincount(
-                            to_bytes(bytes(p)) // width, minlength=n_bins
-                        )[:n_bins]
-                        for p in pdf[payload_col]
-                    ]
-                )
-            else:
-                counts = np.zeros((0, n_bins), dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(ids, n_bins),
-                    "bin": np.tile(bins, len(ids)),
-                    "n": counts.reshape(-1).astype("int64"),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        extract, out_schema
+    bins = np.arange(n_bins)
+    return _payload_stage(
+        df, id_col, payload_col, "doc_id long, bin int, n long",
+        lambda _, p: (
+            bins,
+            np.bincount(to_bytes(p) // width, minlength=n_bins)[:n_bins],
+        ),
     )
 
 
@@ -1378,37 +1405,18 @@ def resize_image_plan(
     streamed through Arrow batches. Decode/resize are STUBBED (inject e.g.
     PIL.Image.open / a thumbnail+save closure); the Spark-side plumbing —
     schema, batching, partition behavior — is real and tested."""
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("resized", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
     if resizer is None:
         def resizer(img, sz):  # noqa: ARG001
             raise NotImplementedError(
                 "image resizing requires an injected resizer (no media libs here)"
             )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [
-                resizer(decode_image(bytes(p), decoder), size)
-                for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "resized": resized,
-                    "width": size[0],
-                    "height": size[1],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        process, out_schema
+    return _payload_stage(
+        df, id_col, payload_col,
+        "doc_id long, resized binary, width int, height int",
+        lambda _, p: (
+            [resizer(decode_image(p, decoder), size)], [size[0]], [size[1]]
+        ),
     )
 
 
@@ -1422,29 +1430,14 @@ def frame_sample_plan(
     """Video frame-sampling pipeline shape: payload → frames (1:N explode
     inside the pandas stage, so frame bytes never concatenate into one row).
     Decoder stubbed like the rest of F4."""
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_no", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frame_nos, frames = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                all_frames = decode_image(bytes(payload), decoder)  # list[bytes]
-                for n, fr in enumerate(all_frames[::every_nth]):
-                    ids.append(i)
-                    frame_nos.append(n)
-                    frames.append(fr)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_no": frame_nos, "frame": frames}
-            )
+    def sample(_, p):
+        frames = decode_image(p, decoder)[::every_nth]  # list[bytes]
+        return range(len(frames)), frames
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        sample, out_schema
+    return _payload_stage(
+        df, id_col, payload_col, "doc_id long, frame_no int, frame binary",
+        sample,
     )
 
 
@@ -1471,45 +1464,21 @@ def channel_stats_plan(
     """
     if n_channels < 1:
         raise ValueError("channel_stats_plan requires n_channels >= 1")
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("channel", T.IntegerType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.LongType()),
-            T.StructField("sq", T.LongType()),
-        ]
-    )
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def stats(_, p):
+        raw = decode_audio(p, decoder)
+        arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        subs = [arr[c::n_channels] for c in range(min(n_channels, arr.size))]
+        return (
+            range(len(subs)),
+            [s.size for s in subs],
+            [s.sum() for s in subs],
+            [(s * s).sum() for s in subs],
+        )
 
-        for pdf in batches:
-            ids, chans, ns, ss, sqs = [], [], [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = decode_audio(bytes(payload), decoder)
-                arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                for c in range(n_channels):
-                    sub = arr[c::n_channels]
-                    if len(sub) == 0:
-                        continue
-                    ids.append(i)
-                    chans.append(c)
-                    ns.append(len(sub))
-                    ss.append(int(sub.sum()))
-                    sqs.append(int((sub * sub).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "channel": pd.array(chans, dtype="int32"),
-                    "n": ns,
-                    "s": ss,
-                    "sq": sqs,
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        stats, out_schema
+    return _payload_stage(
+        df, id_col, payload_col,
+        "doc_id long, channel int, n long, s long, sq long", stats,
     )
 
 
@@ -1532,40 +1501,18 @@ def _segment_sums_kernel(
     (:func:`pixel_segment_sums`). All ``n_segs`` rows emit per payload
     (empty segments as n=0) via the one closed form an engine replays
     without materializing bounds: byte p -> segment (p*n_segs)//len."""
+    segs = np.arange(n_segs)
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, segs, ns, sums = [], [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = to_bytes(bytes(payload))
-                if b.size:
-                    seg_of = (
-                        np.arange(b.size, dtype=np.int64) * n_segs
-                    ) // b.size
-                    ns_arr = np.bincount(seg_of, minlength=n_segs)
-                    sums_arr = np.bincount(
-                        seg_of, weights=b.astype(np.int64), minlength=n_segs
-                    )
-                else:
-                    ns_arr = np.zeros(n_segs, dtype=np.int64)
-                    sums_arr = np.zeros(n_segs)
-                for sg in range(n_segs):
-                    ids.append(i)
-                    segs.append(sg)
-                    ns.append(int(ns_arr[sg]))
-                    sums.append(int(sums_arr[sg]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "seg": pd.Series(segs, dtype="int32"),
-                    "seg_n": pd.Series(ns, dtype="int64"),
-                    "seg_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
+    def sums(_, p):
+        b = to_bytes(p)
+        seg_of = (np.arange(b.size, dtype=np.int64) * n_segs) // max(b.size, 1)
+        return (
+            segs,
+            np.bincount(seg_of, minlength=n_segs),
+            np.bincount(seg_of, weights=b.astype(np.int64), minlength=n_segs),
+        )
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        compute, AHASH_SCHEMA
-    )
+    return _payload_stage(df, id_col, payload_col, AHASH_SCHEMA, sums)
 
 
 def payload_segment_sums(
@@ -1713,45 +1660,14 @@ def image_sample_stats(
     normalization / exposure-audit precompute (mean/variance per
     image at 100 TB without a second pass). One row per image leaves
     Python; no shuffle."""
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.LongType()),
-            T.StructField("sq", T.LongType()),
-            T.StructField("vmin", T.LongType()),
-            T.StructField("vmax", T.LongType()),
-        ]
-    )
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(
-                pdf[id_col].astype("int64"), pdf[payload_col]
-            ):
-                v = decode_image(bytes(payload)).reshape(-1).astype(np.int64)
-                out.append(
-                    (
-                        int(doc_id),
-                        len(v),
-                        int(v.sum()),
-                        int((v * v).sum()),
-                        int(v.min()),
-                        int(v.max()),
-                    )
-                )
-            cols = ["doc_id", "n", "s", "sq", "vmin", "vmax"]
-            yield (
-                pd.DataFrame(out, columns=cols)
-                if out
-                else pd.DataFrame(
-                    {c: pd.Series([], dtype="int64") for c in cols}
-                )
-            )
+    def stats(_, p):
+        v = decode_image(p).reshape(-1).astype(np.int64)
+        return [v.size], [v.sum()], [(v * v).sum()], [v.min()], [v.max()]
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        stats, out_schema
+    return _payload_stage(
+        df, id_col, payload_col,
+        "doc_id long, n long, s long, sq long, vmin long, vmax long", stats,
     )
 
 
@@ -1767,46 +1683,23 @@ def wav_channel_stats(df: DataFrame, id_col: str, payload_col: str) -> DataFrame
     rows — there is no separate ``n_channels`` column). Channels with
     zero frames are OMITTED from the output, not emitted as ``n=0``
     rows."""
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("channel", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.LongType()),
-            T.StructField("sq", T.LongType()),
-        ]
-    )
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, chans, rates, ns, ss, sqs = [], [], [], [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, samples = decode_audio(bytes(payload))
-                wide = samples.astype(np.int64)
-                for c in range(samples.shape[1]):
-                    sub = wide[:, c]
-                    if len(sub) == 0:
-                        continue
-                    ids.append(i)
-                    chans.append(c)
-                    rates.append(rate)
-                    ns.append(len(sub))
-                    ss.append(int(sub.sum()))
-                    sqs.append(int((sub * sub).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "channel": pd.array(chans, dtype="int32"),
-                    "sample_rate": pd.array(rates, dtype="int32"),
-                    "n": pd.Series(ns, dtype="int64"),
-                    "s": pd.Series(ss, dtype="int64"),
-                    "sq": pd.Series(sqs, dtype="int64"),
-                }
-            )
+    def stats(_, p):
+        rate, samples = decode_audio(p)
+        wide = samples.astype(np.int64)
+        k = wide.shape[1] if len(wide) else 0  # zero-frame channels omitted
+        return (
+            range(k),
+            [rate] * k,
+            [len(wide)] * k,
+            wide.sum(axis=0)[:k],
+            (wide * wide).sum(axis=0)[:k],
+        )
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        stats, out_schema
+    return _payload_stage(
+        df, id_col, payload_col,
+        "doc_id long, channel int, sample_rate int, n long, s long, sq long",
+        stats,
     )
 
 
@@ -1848,40 +1741,20 @@ def image_pixels_long(df: DataFrame, id_col: str, payload_col: str) -> DataFrame
     through the default :func:`decode_image` seam — scalar-only output
     (the conformance discipline: no array columns), the 1:H·W·3
     explode vectorized inside the Arrow stage."""
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("r", T.IntegerType()),
-            T.StructField("c", T.IntegerType()),
-            T.StructField("ch", T.IntegerType()),
-            T.StructField("v", T.IntegerType()),
-        ]
-    )
 
-    def explode_px(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rs, cs, chs, vs = [], [], [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                px = decode_image(bytes(payload))
-                h, w = px.shape[:2]
-                n = h * w * 3
-                ids.append(np.full(n, i, dtype=np.int64))
-                rs.append(np.repeat(np.arange(h, dtype=np.int32), w * 3))
-                cs.append(np.tile(np.repeat(np.arange(w, dtype=np.int32), 3), h))
-                chs.append(np.tile(np.arange(3, dtype=np.int32), h * w))
-                vs.append(px.reshape(-1).astype(np.int32))
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids) if ids else np.array([], dtype=np.int64),
-                    "r": np.concatenate(rs) if rs else np.array([], dtype=np.int32),
-                    "c": np.concatenate(cs) if cs else np.array([], dtype=np.int32),
-                    "ch": np.concatenate(chs) if chs else np.array([], dtype=np.int32),
-                    "v": np.concatenate(vs) if vs else np.array([], dtype=np.int32),
-                }
-            )
+    def pixels(_, p):
+        px = decode_image(p)
+        h, w = px.shape[:2]
+        return (
+            np.repeat(np.arange(h), w * 3),
+            np.tile(np.repeat(np.arange(w), 3), h),
+            np.tile(np.arange(3), h * w),
+            px.reshape(-1),
+        )
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        explode_px, out_schema
+    return _payload_stage(
+        df, id_col, payload_col, "doc_id long, r int, c int, ch int, v int",
+        pixels,
     )
 
 
@@ -1921,33 +1794,15 @@ def resize_image_nearest(
         return encode_png(arr)
 
     enc = encoder or _auto_encode
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("resized", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for payload in pdf[payload_col]:
-                px = decode_image(bytes(payload))
-                h, w = px.shape[:2]
-                ri = (np.arange(out_h, dtype=np.int64) * h) // out_h
-                ci = (np.arange(out_w, dtype=np.int64) * w) // out_w
-                out.append(enc(px[np.ix_(ri, ci)]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "resized": out,
-                    "width": out_w,
-                    "height": out_h,
-                }
-            )
+    def resize(_, p):
+        px = decode_image(p)
+        h, w = px.shape[:2]
+        ri = (np.arange(out_h, dtype=np.int64) * h) // out_h
+        ci = (np.arange(out_w, dtype=np.int64) * w) // out_w
+        return [enc(px[np.ix_(ri, ci)])], [out_w], [out_h]
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        process, out_schema
+    return _payload_stage(
+        df, id_col, payload_col,
+        "doc_id long, resized binary, width int, height int", resize,
     )

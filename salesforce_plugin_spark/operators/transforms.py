@@ -65,10 +65,12 @@ def nest_children(
 
 def drop_attributes(df: DataFrame, meta_cols: tuple[str, ...] = ("attributes",)) -> DataFrame:
     """C2: drop per-record metadata columns (contrib ``write_object_to_file``;
-    call site ``salesforce_to_s3_operator.py:208-212``). Returns ``df``
-    itself when none is present, as ``df.drop()`` would build and analyze
-    a new Dataset."""
-    present = [c for c in meta_cols if c in df.columns]
+    call site ``salesforce_to_s3_operator.py:208-212``). Names match
+    case-insensitively, as Spark's default resolver does, so an
+    ``Attributes`` column is dropped too. Returns ``df`` itself when none
+    is present, as ``df.drop()`` would build and analyze a new Dataset."""
+    meta = {c.lower() for c in meta_cols}
+    present = [c for c in df.columns if c.lower() in meta]
     return df.drop(*present) if present else df
 
 

@@ -597,10 +597,10 @@ def upsert_batch(
     """Merge one (batch) DataFrame into the parquet table at ``table_path``,
     keeping the highest-``version_col`` row per key, rewriting only the
     partitions present in the batch."""
-    touched = batch.select(partition_col).distinct()
     current = _read_existing(batch.sparkSession, table_path)
     merged = batch
     if current is not None:
+        touched = batch.select(partition_col).distinct()
         merged = current.join(touched, partition_col, "left_semi").unionByName(
             batch
         )

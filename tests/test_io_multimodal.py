@@ -258,3 +258,95 @@ def test_frame_sample_plan_with_fake_decoder(spark):
     ).collect()
     assert [bytes(r.frame) for r in out] == [b"a", b"c", b"e"]
     assert [r.frame_no for r in out] == [0, 1, 2]
+
+
+def test_capitalized_attributes_column_is_dropped_by_sinks(spark, tmp_path):
+    """Spark resolves ``drop("attributes")`` case-insensitively, so the
+    metadata column is dropped whatever its case, by the extract and by a
+    direct sink call alike."""
+    df = spark.createDataFrame(
+        [(1, {"type": "T"})], "Id long, Attributes map<string,string>"
+    )
+    csv_out = str(tmp_path / "csv")
+    ObjectExtract("Account", csv_out, fmt="csv", resolve=lambda name: df).execute(spark)
+    assert read_text(csv_out).splitlines()[0] == "id"
+    nd_out = str(tmp_path / "nd")
+    write_ndjson(df, nd_out)
+    assert [json.loads(x) for x in read_text(nd_out).splitlines()] == [{"id": 1}]
+
+
+# --- the Arrow payload stage ------------------------------------------------
+
+def bmp_payloads(spark, n_partitions):
+    """Six (doc_id, BMP payload) rows of different heights."""
+    import numpy as np
+
+    from salesforce_plugin_spark.functions.multimodal import encode_bmp
+
+    rows = [
+        (i, encode_bmp(np.arange(12 * (i + 1), dtype=np.uint8).reshape(-1, 4, 3) + i))
+        for i in range(6)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, payload binary").repartition(n_partitions)
+
+
+def test_payload_stage_emits_declared_integer_types(spark):
+    """int columns come out as int, long columns as long, whatever numpy
+    dtype the per-payload function returns (here uint8, Python int and
+    the float64 of a weighted bincount)."""
+    import numpy as np
+    import pyspark.sql.types as T
+
+    from salesforce_plugin_spark.functions.multimodal import _payload_stage
+
+    def per_payload(doc_id, p):
+        b = np.frombuffer(p, dtype=np.uint8)
+        total = np.bincount(np.zeros(len(b), dtype=int), weights=b)  # float64
+        return b, [doc_id * 2**40] * len(b), np.repeat(total, len(b))
+
+    df = spark.createDataFrame([(3, b"\x01\xff")], "doc_id long, p binary")
+    out = _payload_stage(df, "doc_id", "p", "doc_id long, v int, big long, total long", per_payload)
+    assert [f.dataType for f in out.schema.fields] == [
+        T.LongType(), T.IntegerType(), T.LongType(), T.LongType()
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (3, 1, 3 * 2**40, 256), (3, 255, 3 * 2**40, 256)
+    ]
+    assert all(type(x) is int for r in out.collect() for x in r)
+
+
+def test_payload_stage_explode_is_partition_invariant(spark):
+    """A 1:N stage (pixels, frames) gives the same rows over one and over
+    two input partitions."""
+    from salesforce_plugin_spark.functions.multimodal import image_pixels_long
+
+    def frames(df):
+        return frame_sample_plan(
+            df, "doc_id", "payload", every_nth=3,
+            decoder=lambda b: [b[i : i + 5] for i in range(0, len(b), 5)],
+        )
+
+    for stage in (lambda d: image_pixels_long(d, "doc_id", "payload"), frames):
+        one, two = (sorted(stage(bmp_payloads(spark, n)).collect()) for n in (1, 2))
+        assert one == two and len(one) > 6
+
+
+def test_payload_stage_zero_rows_keep_declared_schema(spark):
+    from salesforce_plugin_spark.functions.multimodal import (
+        AHASH_SCHEMA,
+        image_pixels_long,
+        payload_segment_sums,
+        wav_channel_stats,
+    )
+
+    empty = bmp_payloads(spark, 2).limit(0)
+    out = image_pixels_long(empty, "doc_id", "payload")
+    assert out.schema.simpleString() == "struct<doc_id:bigint,r:int,c:int,ch:int,v:int>"
+    assert out.collect() == []
+    assert payload_segment_sums(empty, "doc_id", "payload").schema == AHASH_SCHEMA
+    assert payload_segment_sums(empty, "doc_id", "payload").collect() == []
+    wav = wav_channel_stats(empty, "doc_id", "payload")
+    assert wav.schema.simpleString() == (
+        "struct<doc_id:bigint,channel:int,sample_rate:int,n:bigint,s:bigint,sq:bigint>"
+    )
+    assert wav.collect() == []
